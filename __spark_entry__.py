@@ -837,39 +837,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["classifier_score"] = q_classifier_score
 
-    def q_cuckoo_filter(spark, sf_dir):
-        """Cuckoo arm of the URL-seen prefilter (operators/cuckoo.py):
-        build per-bucket fingerprint tables over the seen half, probe the
-        candidate third; definite-new rows skip the exact anti-join, maybe-
-        seen rows fall through to it — the output therefore EQUALS the
-        exact anti-join (the oracle), which is the filter's whole contract
-        (false positives safe, false negatives impossible)."""
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.cuckoo import (
-            CuckooState,
-            build_cuckoo_blobs,
-            cuckoo_filter_new,
-        )
-        from siteone_crawler_spark.operators.seen import key_bucket
-
-        _register(spark, sf_dir)
-        keyed = spark.table("documents").select(
-            "doc_id",
-            F.md5(F.concat(F.lit("url:"), F.col("doc_id").cast("string"))).alias(
-                "url_key"
-            ),
-        )
-        seen = keyed.filter(F.col("doc_id") % 2 == 0).select("url_key")
-        blobs = build_cuckoo_blobs(
-            seen.withColumn("bucket", key_bucket(F.col("url_key"), 8)), 1 << 12
-        )
-        state = CuckooState.from_rows(blobs, 8, 1 << 12)
-        cand = keyed.filter(F.col("doc_id") % 3 == 0)
-        return cuckoo_filter_new(spark, cand, state, seen)
-
-    q["cuckoo_filter"] = q_cuckoo_filter
-
     def q_minhash_sigs(spark, sf_dir):
         from siteone_crawler_spark.functions.text import token_count
         from siteone_crawler_spark.operators.dedup import minhash_signatures
@@ -1694,7 +1661,6 @@ _PYTEST_ONLY = (
     "temperature_sample",
     "pack_sequences",
     "classifier_score",
-    "cuckoo_filter",
     "gopher_quality",
     "repeated_windows",
     "split_assign",
@@ -2243,11 +2209,6 @@ def _all_oracle_sql() -> dict[str, str]:
                round(1.0 / (1.0 + exp(-coalesce(dots.dot, 0.0))), 6)
                  AS quality_prob
         FROM documents d LEFT JOIN dots USING (doc_id)"""
-
-    o["cuckoo_filter"] = """
-        SELECT doc_id, md5('url:' || CAST(doc_id AS VARCHAR)) AS url_key
-        FROM documents
-        WHERE doc_id % 3 = 0 AND doc_id % 2 <> 0"""
 
     o["minhash_signatures"] = f"""
         WITH sh AS (

@@ -183,8 +183,8 @@ def wave_bench(
             max_queue_length=10**12,
         )
         eng = CrawlEngine(spark, cfg, ckpt, n_buckets=64)
-        # seed OUTSIDE the timed region: the frontier's own write + seen/
-        # bloom install is the PREVIOUS wave's finalize cost, and the timed
+        # seed OUTSIDE the timed region: the frontier's own write + seen-
+        # key/bloom install is the PREVIOUS wave's finalize cost, and the timed
         # wave pays that same cost for ITS output frontier — timing both
         # double-counts
         eng.seed_frontier(frontier)

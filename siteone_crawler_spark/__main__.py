@@ -71,9 +71,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--robots-json", help="JSON file {host: robots_txt_body}")
     p.add_argument("--synthetic-docs", type=int, default=0,
                    help="crawl a deterministic generated site of N docs")
-    p.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-                   help="URL-seen prefilter arm: bloom (cheapest bits/key) or "
-                        "cuckoo (deletable — recrawl pipelines can clear keys)")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--max-waves", type=int, default=0)
@@ -116,7 +113,6 @@ def config_from_args(a) -> "CrawlConfig":
         resolve=tuple(a.resolve),
         max_waves=a.max_waves,
         workers=a.workers,
-        seen_filter=a.seen_filter,
         max_reqs_per_sec=a.max_reqs_per_sec,
         request_timeout_s=a.timeout,
         wave_seconds=a.wave_seconds,

@@ -89,17 +89,10 @@ class CrawlConfig:
     per_host_wave_budget: int = 0  # 0 = unlimited (parity mode)
     wave_seconds: float = 0.0  # >0: per-host budget = wave_seconds/crawl_delay
     default_crawl_delay: float = 1.0  # used when robots has no Crawl-delay
-    politeness_salts: int = 1  # >1: split a hot host's window across salts
     max_waves: int = 0  # 0 = until frontier empty
     single_foreign_page: bool = False  # P13: no <a href> from foreign-d2l pages
     # --resolve overrides, curl syntax "domain:port:ip" (crawler.rs:179-191)
     resolve: tuple[str, ...] = ()
-    # URL-seen prefilter arm (north-star "partitioned cuckoo/bloom filter"):
-    # "bloom" (default, cheapest bits/key) or "cuckoo" (operators/cuckoo.py —
-    # deletable, so recrawl/invalidation pipelines can clear keys without a
-    # rebuild). Same no-false-negative contract, same checkpoint schema and
-    # wave plan either way; crawl output is bit-identical across arms.
-    seen_filter: str = "bloom"
 
     def __post_init__(self):
         # F13: accept the reference's delimited-PCRE config syntax

@@ -9,15 +9,16 @@ shared DashMap state) as deterministic Spark dataflow. One wave =
       → explode spans → resolve/canonicalize   (pandas UDF, crawler.rs:1020+)
       → host / breaker / robots / regex /      (enqueue pipeline,
         suitability filters                     crawler.rs:1055-1306)
-      → anti-join seen (bloom + bucketed exact) (crawler.rs:1287-1297)
+      → anti-join seen (bloom + exact key scan) (crawler.rs:1287-1297)
       → first-wins dedup + deterministic rank   (crawler.rs:1232-1242)
       → caps → frontier(K+1), visited, skipped, events, metrics
       → checkpoint commit (atomic manifest bump)
 
 State tables (sources/checkpoint.py):
   frontier   append-only discovery log: ONE row per enqueued URL, wave =
-             discovery wave; doubles as the exact seen set and the order
-             source (seq is the global enqueue == dequeue sequence).
+             discovery wave; doubles as the exact seen set (read back as a
+             url_key-only scan) and the order source (seq is the global
+             enqueue == dequeue sequence).
   deferred   politeness-deferred pending rows, indexed by the wave that will
              process them (empty in parity mode).
   visited / skipped / events / metrics / blooms  as named.
@@ -33,9 +34,8 @@ Scale notes (local[32] here, 1000 executors in spirit):
     (resolve, robots) and one narrow applyInPandas (breaker, only over
     at-risk basename groups);
   - the wave rank avoids a single-partition window (operators/ordering.py);
-  - seen-set dedup is prefiltered (bloom or deletable cuckoo arm,
-    config.seen_filter) so only maybe-seen candidates join
-    (operators/seen.py, operators/cuckoo.py);
+  - seen-set dedup is Bloom-prefiltered above SeenSet.bloom_min_keys keys,
+    so only maybe-seen candidates join the exact keys (operators/seen.py);
   - every wave's state lands in the checkpoint store, so lineage is cut per
     wave (no ever-growing plan) and a killed run resumes bit-identically;
   - between crawls, invalidate(urls) re-queues already-crawled URLs through
@@ -69,7 +69,7 @@ from .functions.urls import (
     make_resolve_udf,
 )
 from .operators.ordering import with_global_seq
-from .operators.seen import SeenSet, key_bucket
+from .operators.seen import SeenSet
 from .sources.checkpoint import CheckpointStore
 
 FRONTIER_SCHEMA = (
@@ -89,6 +89,7 @@ EVENTS_SCHEMA = "basename string, seq long"
 BN_STATE_SCHEMA = "basename string, evt_seqs array<bigint>, n_events long"
 METRICS_SCHEMA = "wave int, stage string, rows long"
 LINEAGE_SCHEMA = "wave int, table string, file string, n_rows long, n_bytes long"
+BLOOMS_SCHEMA = "bucket int, bits binary"
 
 
 def _wildcard_to_java_regex(pattern: str) -> str:
@@ -164,9 +165,7 @@ class CrawlEngine:
         self.spark = spark
         self.config = config
         self.store = CheckpointStore(spark, checkpoint_dir)
-        self.seen = SeenSet(
-            spark, n_buckets=n_buckets, kind=getattr(config, "seen_filter", "bloom")
-        )
+        self.seen = SeenSet(spark, n_buckets=n_buckets)
         self.n_enqueued = 0
         self._wave_caches: list[DataFrame] = []
         self._wave_seq_start: dict[int, int] = {}
@@ -279,8 +278,8 @@ class CrawlEngine:
 
         The reference has no recrawl (one process = one crawl, then the
         seen DashMap dies, crawler.rs:96-103); at cluster scale re-fetching
-        10^10 URLs to refresh 10^4 is not an option, which is what this +
-        SeenSet.remove (organic rediscovery variant) exist for."""
+        10^10 URLs to refresh 10^4 is not an option, which is what this
+        exists for."""
         manifest = self.store.read_manifest()
         last = manifest["last_wave"]
         if last < 0:
@@ -304,21 +303,16 @@ class CrawlEngine:
     def seed_frontier(self, frontier: DataFrame) -> None:
         """Install an externally-built wave-0 frontier (FRONTIER_SCHEMA
         columns, url_key distinct, seq pre-assigned 0..N-1). Used by the
-        steady-state benchmark and by callers resuming from external state."""
-        self.store.write_table("frontier", 0, frontier, max_files=32)
+        steady-state benchmark and by callers resuming from external state.
+        Columns are cast to FRONTIER_SCHEMA, which the checkpoint reads
+        declare."""
+        cols = [
+            F.col(name).cast(t).alias(name)
+            for name, t in (f.split() for f in FRONTIER_SCHEMA.split(","))
+        ]
+        self.store.write_table("frontier", 0, frontier.select(*cols), max_files=32)
         n = self.store.count_rows("frontier", 0)
-        self.store.write_table(
-            "seen",
-            0,
-            self.store.read_wave("frontier", 0, FRONTIER_SCHEMA)
-            .select("url_key")
-            .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets)),
-            max_files=32,
-            partition_by="bucket",
-        )
-        self.seen._keys = self.store.read_all_partitioned(
-            "seen", 0, "url_key string, bucket int", ["url_key", "bucket"]
-        )
+        self.seen._keys = self._seen_keys(0)
         self._wave_seq_start[0] = 0
         self.n_enqueued = n
         if n >= self.seen.bloom_min_keys:
@@ -327,23 +321,14 @@ class CrawlEngine:
     def _restore_state(self, last_wave: int) -> None:
         # frontier rows discovered while processing last_wave live at index
         # last_wave+1 — they are already committed state (manifest bumped
-        # after finalize), so the seen set must include them
-        if self.store.has_wave("seen", last_wave + 1):
-            keys = self.store.read_all_partitioned(
-                "seen", last_wave + 1, "url_key string, bucket int",
-                ["url_key", "bucket"],
-            )
-        else:  # pre-seen-table checkpoints: derive from the frontier log
-            keys = (
-                self.store.read_all("frontier", last_wave + 1, FRONTIER_SCHEMA)
-                .select("url_key")
-                .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets))
-            )
-        self.seen._keys = keys
-        self.n_enqueued = keys.count()
-        self._wave_seq_start[last_wave + 1] = self.n_enqueued - self.store.count_rows(
-            "frontier", last_wave + 1
+        # after finalize), so the seen set must include them. One frontier
+        # row per enqueued URL: the enqueue count is a footer sum, no job.
+        self.seen._keys = self._seen_keys(last_wave + 1)
+        n_last = self.store.count_rows("frontier", last_wave + 1)
+        self.n_enqueued = n_last + sum(
+            self.store.count_rows("frontier", w) for w in range(last_wave + 1)
         )
+        self._wave_seq_start[last_wave + 1] = self.n_enqueued - n_last
         # basename-breaker state: newest checkpointed table at or before
         # last_wave; waves after it are replayed (pre-state-table checkpoints
         # replay everything — the merge chain reproduces the same table)
@@ -356,13 +341,11 @@ class CrawlEngine:
             self._bn_state = self.store.read_wave(
                 "basename_events", w0, BN_STATE_SCHEMA
             )
-            self._bn_state_max = int(
-                self._bn_state.agg(F.max("n_events")).first()[0] or 0
-            )
+            self._bn_state_max = self._bn_max(w0)
         for w in range(w0 + 1, last_wave + 1):
             self._absorb_events(w)
         bloom_rows = self.store.read_wave(
-            "blooms", last_wave + 1, "bucket int, bits binary"
+            "blooms", last_wave + 1, BLOOMS_SCHEMA
         ).collect()
         if bloom_rows:
             self.seen.restore_prefilter(
@@ -370,7 +353,7 @@ class CrawlEngine:
             )
             self._bloom_ready = True
         elif self.n_enqueued >= self.seen.bloom_min_keys:
-            self._bloom_absorb(keys, self.n_enqueued)
+            self._bloom_absorb(self.seen.keys, self.n_enqueued)
 
     def _pending(self, wave: int) -> DataFrame:
         newly = self.store.read_wave("frontier", wave, FRONTIER_SCHEMA)
@@ -595,31 +578,13 @@ class CrawlEngine:
         metrics.append((wave, "skipped", self.store.count_rows("skipped", wave + 1)))
         _mark("footer_counts")
 
-        # metrics + lineage are independent tiny writes — overlap them (the
-        # wave tail barely scaled with cores: x1.2 from 2->8)
-        def _write_metrics():
-            self.store.write_table(
-                "metrics", wave, self.spark.createDataFrame(metrics, METRICS_SCHEMA)
-            )
-
-        def _write_lineage():
-            # per-partition lineage (north rule): one row per output file
-            lineage = self.store.collect_lineage(
-                wave, ("visited",)
-            ) + self.store.collect_lineage(wave + 1, ("frontier", "skipped"))
-            self.store.write_table(
-                "lineage",
-                wave,
-                self.spark.createDataFrame(lineage, LINEAGE_SCHEMA)
-                if lineage
-                else self.spark.createDataFrame([], LINEAGE_SCHEMA),
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_m = ex.submit(_write_metrics)
-            f_l = ex.submit(_write_lineage)
-            f_m.result()
-            f_l.result()
+        # metrics + lineage are rows the driver holds: pyarrow writes, no job
+        self.store.write_table("metrics", wave, metrics, schema=METRICS_SCHEMA)
+        # per-partition lineage (north rule): one row per output file
+        lineage = self.store.collect_lineage(
+            wave, ("visited",)
+        ) + self.store.collect_lineage(wave + 1, ("frontier", "skipped"))
+        self.store.write_table("lineage", wave, lineage, schema=LINEAGE_SCHEMA)
         _mark("metrics+lineage")
         self.store.commit_wave(wave, done=False)
         _mark("commit")
@@ -878,82 +843,40 @@ class CrawlEngine:
         n_new = self.store.count_rows("frontier", wave)  # footer read, no job
         _sub("frontier_write")
 
-        # seen-set table: (url_key, bucket) PARTITIONED BY bucket on disk —
-        # the exact anti-join side partition-prunes and never recomputes the
-        # bucket hash; derived from the just-written frontier parquet so its
-        # lineage is one file scan
-        def _write_seen():
-            self.store.write_table(
-                "seen",
-                wave,
-                self.store.read_wave("frontier", wave, FRONTIER_SCHEMA)
-                .select("url_key")
-                .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets)),
-                max_files=self._nfiles(n_cand),
-                partition_by="bucket",
-            )
-
         self._wave_seq_start[wave] = self.n_enqueued
         self.n_enqueued += n_new
+        # parquet-backed seen keys: cut lineage, one url_key scan over the
+        # committed frontier waves
+        self.seen._keys = self._seen_keys(wave)
 
         # bloom maintenance only once the seen set is big enough to pay for
-        # it (below that, filter_new broadcast-anti-joins the exact keys);
-        # bitsets are built DISTRIBUTED per bucket, only blobs hit the driver.
-        # Steady-state (bloom already live): the wave's key slice comes from
-        # the just-written frontier parquet, independent of the seen write —
-        # the two run as CONCURRENT jobs, taking the bloom build out of the
-        # wave's serial tail (a constant cost that otherwise caps N-vs-4N
-        # scaling efficiency).
-        def _update_bloom():
-            src = self.store.read_wave("frontier", wave, FRONTIER_SCHEMA).select(
-                "url_key"
-            ).withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets))
-            self._bloom_absorb(src, n_new)
-            self.store.write_table(
-                "blooms",
-                wave,
-                self.spark.createDataFrame(
-                    self.seen.prefilter_rows(), "bucket int, bits binary"
-                ),
-            )
-
-        want_bloom = self.n_enqueued >= self.seen.bloom_min_keys
-        if want_bloom and self._bloom_ready:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                f_seen = ex.submit(_write_seen)
-                f_bloom = ex.submit(_update_bloom)
-                f_seen.result()
-                f_bloom.result()
-            _sub("seen+bloom")
-        else:
-            _write_seen()
-            _sub("seen_write")
-            if want_bloom:  # first build folds the ENTIRE seen set
-                self.seen._keys = self.store.read_all_partitioned(
-                    "seen", wave, "url_key string, bucket int", ["url_key", "bucket"]
+        # it (below that, filter_new broadcast-anti-joins the exact keys):
+        # the first build folds the ENTIRE seen set, later waves only their
+        # own key slice; bitsets are built DISTRIBUTED per bucket above a
+        # small slice, only blobs hit the driver
+        if self.n_enqueued >= self.seen.bloom_min_keys:
+            if self._bloom_ready:
+                self._bloom_absorb(
+                    self.store.read_wave("frontier", wave, FRONTIER_SCHEMA), n_new
                 )
+            else:
                 self._bloom_absorb(self.seen.keys, self.n_enqueued)
-                self.store.write_table(
-                    "blooms",
-                    wave,
-                    self.spark.createDataFrame(
-                        self.seen.prefilter_rows(), "bucket int, bits binary"
-                    ),
-                )
-        # parquet-backed seen keys: cut lineage, one scan over committed waves
-        self.seen._keys = self.store.read_all_partitioned(
-            "seen", wave, "url_key string, bucket int", ["url_key", "bucket"]
-        )
-        _sub("tail")
+            self.store.write_table(
+                "blooms", wave, self.seen.prefilter_rows(), schema=BLOOMS_SCHEMA
+            )
+            _sub("bloom")
         return n_new
 
+    def _seen_keys(self, upto_wave: int) -> DataFrame:
+        """The exact seen set: url_key projection of frontier waves 0..upto_wave."""
+        return self.store.read_all_partitioned(
+            "frontier", upto_wave, FRONTIER_SCHEMA, ["url_key"]
+        )
+
     def _bloom_absorb(self, src: DataFrame, slice_rows: int) -> None:
-        """Fold a key slice into the prefilter (bloom or cuckoo arm — the
-        driver-vs-distributed build cutoff and blob merge live behind
-        SeenSet.absorb). Shared by the per-wave path, external seeding,
-        and resume."""
+        """Fold a url_key slice into the Bloom prefilter (the driver-vs-
+        distributed build cutoff lives behind SeenSet.absorb). Shared by the
+        per-wave path, external seeding, and resume."""
         self.seen.absorb(src, slice_rows)
         self._bloom_ready = True
 
@@ -1037,8 +960,19 @@ class CrawlEngine:
             )
         self.store.write_table("basename_events", wave, merged)
         self._bn_state = self.store.read_wave("basename_events", wave, BN_STATE_SCHEMA)
-        self._bn_state_max = int(
-            self._bn_state.agg(F.max("n_events")).first()[0] or 0
+        self._bn_state_max = self._bn_max(wave)
+
+    def _bn_max(self, wave: int) -> int:
+        """Max n_events of a basename_events wave: driver-side column read,
+        no job."""
+        import pyarrow.compute as pc
+
+        return max(
+            (
+                pc.max(t["n_events"]).as_py() or 0
+                for t in self.store.iter_column_chunks("basename_events", wave, ["n_events"])
+            ),
+            default=0,
         )
 
     def _events_agg(self) -> DataFrame | None:
@@ -1182,16 +1116,11 @@ class CrawlEngine:
     def _admit(self, pending: DataFrame):
         """Politeness admission (north-rule superset — the reference's
         politeness is a single global rate limiter, crawler.rs:540-569, with
-        NO Crawl-delay support): a salted priority queue keyed by
+        NO Crawl-delay support): a priority queue keyed by
         (depth, host, priority=seq) assigns each host a per-wave fetch
         budget; robots Crawl-delay shrinks it (budget = wave_seconds/delay).
         Deferred rows queue for the next wave. Parity config (budget=0,
-        wave_seconds=0) admits everything -> exact BFS order.
-
-        Zipfian skew: with politeness ON, a hot host's window partition is
-        bounded by its budget anyway; politeness_salts > 1 additionally
-        splits the host partition by a url hash salt (budget divided across
-        salts) so no single task ranks a mega-host alone."""
+        wave_seconds=0) admits everything -> exact BFS order."""
         cfg = self.config
         if (
             cfg.per_host_wave_budget <= 0
@@ -1253,15 +1182,7 @@ class CrawlEngine:
                 budgets.append(F.lit(default_budget))
         budget_col = budgets[0] if len(budgets) == 1 else F.least(*budgets)
 
-        salts = max(1, cfg.politeness_salts)
-        if salts > 1:
-            salt = F.pmod(F.xxhash64("url_key"), F.lit(salts))
-            w = W.partitionBy("host", salt).orderBy("depth", "seq")
-            budget_col = F.greatest(
-                (budget_col / salts).cast("int"), F.lit(1)
-            )
-        else:
-            w = W.partitionBy("host").orderBy("depth", "seq")
+        w = W.partitionBy("host").orderBy("depth", "seq")
         ranked = pending.withColumn("__hr", F.row_number().over(w)).withColumn(
             "__budget", budget_col
         )

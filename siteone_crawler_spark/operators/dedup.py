@@ -5,7 +5,8 @@ Five flavors, all DataFrame-native where possible:
   exact          md5(normalized text) groupBy — the hash-groupBy baseline
   minhash + LSH  word-shingles -> k independent minhashes -> b bands ->
                  band-bucket join -> candidate pairs -> exact Jaccard verify
-  simhash        64-bit sign-aggregated token hashes (Arrow/numpy UDF)
+  simhash        64-bit sign-aggregated token hashes (both kernels native
+                 Catalyst expressions: md5 default, xxhash64 native=True)
   ngram-jaccard  exact Jaccard over shingle sets for candidate pairs
   embedding near-dup  cosine over embedding vectors (operators/similarity.py)
 

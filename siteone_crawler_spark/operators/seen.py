@@ -1,12 +1,12 @@
-"""The URL-seen set: bucketed exact store + per-bucket Bloom prefilter.
+"""The URL-seen set: exact key scan + per-bucket Bloom prefilter.
 
 Scale story (the reference's DashMap keyed by MD5(url),
 /root/reference/src/engine/crawler.rs:96-103, becomes):
 
-  - keys are hash-bucketed: bucket = pmod(xxhash64(url_key), B). The key
-    table on disk is partitioned by `bucket`, so a wave's anti-join reads
-    ONLY buckets that actually contain candidate keys (partition pruning).
-  - each bucket carries a Bloom filter (numpy bitset, k derived hashes from
+  - the exact store is the engine's append-only frontier log (one row per
+    enqueued URL), read as a url_key-only projection.
+  - keys are hash-bucketed on the fly: bucket = pmod(xxhash64(url_key), B);
+    each bucket carries a Bloom filter (numpy bitset, k derived hashes from
     the md5 key itself — no extra hashing pass). Candidates that miss the
     Bloom are DEFINITELY new and skip the exact anti-join entirely; only
     Bloom-positive candidates (true dupes + FPR) shuffle into the exact
@@ -34,9 +34,8 @@ from pyspark.sql import functions as F
 
 # key-slice size above which Bloom bitsets are built DISTRIBUTED (per-bucket
 # applyInPandas, build_bloom_blobs) instead of a single-threaded driver-pandas
-# hash pass — the one cutoff shared by SeenSet.add and the engine's per-wave
-# _bloom_absorb (engine.py), pinned equivalent by test_seen_ordering's
-# builder-path test
+# hash pass (SeenSet.absorb); both builders are pinned byte-identical by
+# test_seen_ordering's builder-path test
 DRIVER_BLOOM_BUILD_MAX_KEYS = 250_000
 
 
@@ -134,134 +133,47 @@ def build_bloom_blobs(keys_df: DataFrame, m: int, k: int) -> list[tuple[int, byt
 
 
 class SeenSet:
-    """Exact key table (url_key, bucket) + a probabilistic prefilter.
+    """Exact URL keys + a per-bucket Bloom prefilter.
 
-    Two drop-in prefilter arms behind the same facade (the north-star's
-    "partitioned cuckoo/bloom URL-seen filter"):
-      - kind="bloom" (default): per-bucket bitsets, cheapest bits/key;
-      - kind="cuckoo" (operators/cuckoo.py): per-bucket fingerprint tables —
-        same no-false-negative contract PLUS deletion, so a recrawl/
-        invalidation pipeline can make URLs schedulable again without a
-        rebuild.
-    Both serialize as (bucket int, bits binary) rows, so the engine's
-    checkpoint table, absorb path, and filter_new plan are arm-agnostic.
-    """
+    `keys` is a url_key-only DataFrame the owner installs (the engine points
+    it at a projected scan of the committed frontier log); bucket ids are
+    computed where the Bloom filter needs them, never stored."""
 
-    def __init__(
-        self,
-        spark,
-        n_buckets: int = 64,
-        bits_per_bucket: int = 1 << 17,
-        kind: str = "bloom",
-        cuckoo_rows_per_bucket: int = 1 << 15,
-    ):
+    def __init__(self, spark, n_buckets: int = 64, bits_per_bucket: int = 1 << 17):
         self.spark = spark
         self.n_buckets = n_buckets
-        self.kind = kind
-        if kind == "bloom":
-            self.prefilter = BloomState(n_buckets, bits_per_bucket)
-        elif kind == "cuckoo":
-            from .cuckoo import CuckooState
+        self.prefilter = BloomState(n_buckets, bits_per_bucket)
+        self._keys: DataFrame | None = None  # column: url_key
 
-            self.prefilter = CuckooState(n_buckets, cuckoo_rows_per_bucket)
-        else:
-            raise ValueError(f"unknown seen-filter kind: {kind!r}")
-        self._keys: DataFrame | None = None  # columns: url_key, bucket
-
-    @property
-    def bloom(self):
-        """Back-compat alias for the prefilter state (bloom was the only arm
-        before the cuckoo one landed; engine/tests address the facade)."""
-        return self.prefilter
-
-    @bloom.setter
-    def bloom(self, state) -> None:
-        self.prefilter = state
-
-    # ---------------------------------------------- arm-agnostic operations
     def absorb(self, src: DataFrame, slice_rows: int) -> None:
-        """Fold a (url_key, bucket) key slice into the prefilter. Driver
-        build while the slice is modest (a single-threaded pandas hash pass
-        is cheaper than a Spark stage); distributed per-bucket build above
-        the cutoff — a 10^10-key seen set must never toPandas through the
-        driver. Shared by the engine's per-wave path, external seeding,
-        resume, and SeenSet.add."""
-        if slice_rows < DRIVER_BLOOM_BUILD_MAX_KEYS:
-            self.prefilter.add_keys(src.select("url_key", "bucket").toPandas())
-        elif self.kind == "bloom":
-            for b, blob in build_bloom_blobs(src, self.prefilter.m, self.prefilter.k):
-                self.prefilter.merge_blob(b, blob)
-        else:
-            from .cuckoo import build_cuckoo_blobs
-
-            for b, blob in build_cuckoo_blobs(src, self.prefilter.m):
-                self.prefilter.merge_blob(b, blob)
-
-    def remove(self, keys: DataFrame) -> None:
-        """Remove keys from the seen set (recrawl/invalidation): the URLs
-        become enqueue-able again the next time a link reaches filter_new.
-
-        The exact table drops the keys (anti-join) — that alone is CORRECT
-        on both arms, because a stale prefilter positive is safe: it only
-        routes the key into the exact anti-join, which now misses, so the
-        key passes. The arms differ in hygiene: the cuckoo arm also deletes
-        the fingerprints (the filter stays tight across unbounded
-        invalidation cycles — the capability it exists for), while bloom
-        bits cannot clear, so stale positives accumulate as extra
-        exact-join traffic until a periodic rebuild (absorb over the
-        remaining keys into a fresh BloomState).
-
-        `keys`: DataFrame with a url_key column. Invalidation batches are
-        operator-issued and modest (a recrawl list, an expiry sweep), so
-        the cuckoo delete runs driver-side; a 10^8-key purge would instead
-        rebuild the affected buckets distributed, like absorb."""
-        kb = keys.select(
+        """Fold a url_key slice into the prefilter. Driver build while the
+        slice is modest (a single-threaded pandas hash pass is cheaper than a
+        Spark stage); distributed per-bucket build above the cutoff — a
+        10^10-key seen set must never toPandas through the driver. Shared by
+        the engine's per-wave path, external seeding and resume."""
+        kb = src.select(
             "url_key", key_bucket(F.col("url_key"), self.n_buckets).alias("bucket")
         )
-        self._keys = self.keys.join(
-            kb.select("url_key"), on=["url_key"], how="left_anti"
-        )
-        if self.kind == "cuckoo":
-            self.prefilter.delete_keys(kb.toPandas())
+        if slice_rows < DRIVER_BLOOM_BUILD_MAX_KEYS:
+            self.prefilter.add_keys(kb.toPandas())
+        else:
+            for b, blob in build_bloom_blobs(kb, self.prefilter.m, self.prefilter.k):
+                self.prefilter.merge_blob(b, blob)
 
     def prefilter_rows(self) -> list[tuple[int, bytes]]:
-        """(bucket, blob) checkpoint rows — same schema for both arms."""
+        """(bucket, bits) rows of the checkpointed `blooms` table."""
         return self.prefilter.to_rows()
 
     def restore_prefilter(self, rows: list[tuple[int, bytes]]) -> None:
-        if self.kind == "bloom":
-            self.prefilter = BloomState.from_rows(
-                rows, self.n_buckets, self.prefilter.m, self.prefilter.k
-            )
-        else:
-            from .cuckoo import CuckooState
-
-            self.prefilter = CuckooState.from_rows(
-                rows, self.n_buckets, self.prefilter.m
-            )
+        self.prefilter = BloomState.from_rows(
+            rows, self.n_buckets, self.prefilter.m, self.prefilter.k
+        )
 
     @property
     def keys(self) -> DataFrame:
         if self._keys is None:
-            self._keys = self.spark.createDataFrame([], "url_key string, bucket int")
+            self._keys = self.spark.createDataFrame([], "url_key string")
         return self._keys
-
-    def count(self) -> int:
-        return self.keys.count() if self._keys is not None else 0
-
-    def add(self, new_keys: DataFrame, n_keys: int | None = None) -> None:
-        """new_keys: DataFrame with url_key column (assumed distinct, unseen).
-        Driver-side bloom build only while the slice is modest; the
-        distributed per-bucket builder above that (pass n_keys to skip the
-        sizing count). Same cutoff as the engine's per-wave _bloom_absorb —
-        one constant repo-wide (test_seen_ordering pins builder-path
-        equivalence)."""
-        kb = new_keys.select(
-            "url_key", key_bucket(F.col("url_key"), self.n_buckets).alias("bucket")
-        )
-        n = n_keys if n_keys is not None else kb.count()
-        self.absorb(kb, n)
-        self._keys = self.keys.unionByName(kb)
 
     # below this many seen keys the bloom prefilter costs more (one extra
     # Python stage per wave + the bitset build) than the broadcast anti-join
@@ -274,25 +186,19 @@ class SeenSet:
     ) -> DataFrame:
         """Return candidates whose key is NOT in the seen set.
 
-        Bloom-negative rows skip the join; only maybe-seen rows anti-join the
-        exact table (pre-pruned to the candidate buckets).
+        Below bloom_min_keys: one broadcast anti-join. Above it, Bloom-negative
+        rows skip the join; only maybe-seen rows anti-join the exact keys.
         """
-        spark = self.spark
         if n_seen is not None and n_seen == 0:
             return candidates
+        keys = self.keys.select(F.col("url_key").alias(key_col))
         if n_seen is not None and n_seen < self.bloom_min_keys:
-            return candidates.join(
-                F.broadcast(self.keys.withColumnRenamed("url_key", key_col).select(key_col)),
-                on=[key_col],
-                how="left_anti",
-            )
-        cand = candidates.withColumn("__bucket", key_bucket(F.col(key_col), self.n_buckets))
-        bc = spark.sparkContext.broadcast(
+            return candidates.join(F.broadcast(keys), on=[key_col], how="left_anti")
+        bc = self.spark.sparkContext.broadcast(
             {
-                "kind": self.kind,
                 "rows": self.prefilter_rows(),
                 "m": self.prefilter.m,
-                "k": getattr(self.prefilter, "k", None),
+                "k": self.prefilter.k,
                 "B": self.n_buckets,
             }
         )
@@ -300,40 +206,19 @@ class SeenSet:
         @F.pandas_udf("boolean")
         def maybe_seen(keys: pd.Series, buckets: pd.Series) -> pd.Series:
             v = bc.value
-            if v["kind"] == "bloom":
-                st = BloomState.from_rows(v["rows"], v["B"], v["m"], v["k"])
-            else:
-                from siteone_crawler_spark.operators.cuckoo import CuckooState
-
-                st = CuckooState.from_rows(v["rows"], v["B"], v["m"])
+            st = BloomState.from_rows(v["rows"], v["B"], v["m"], v["k"])
             pdf = pd.DataFrame({"url_key": keys, "bucket": buckets}).reset_index(drop=True)
             return pd.Series(st.contains(pdf))
 
+        bucket = key_bucket(F.col(key_col), self.n_buckets)
+        cand = candidates.withColumn("__bucket", bucket)
         cand = cand.withColumn("__maybe", maybe_seen(F.col(key_col), F.col("__bucket")))
         definite_new = cand.filter(~F.col("__maybe"))
         maybe = cand.filter(F.col("__maybe"))
-        # exact anti-join only for the maybe slice
-        seen_pruned = self.keys.withColumnRenamed("url_key", key_col)
-        if self._small(n_seen):
-            survivors = maybe.join(
-                F.broadcast(seen_pruned.select(key_col)), on=[key_col], how="left_anti"
-            )
-        else:
-            # co-key on (bucket, key): the seen table is bucket-partitioned
-            # on disk, so the scan prunes to touched buckets and both sides
-            # hash identically in the shuffle
-            survivors = maybe.join(
-                seen_pruned.withColumnRenamed("bucket", "__bucket"),
-                on=[key_col, "__bucket"],
-                how="left_anti",
-            )
+        # exact anti-join only for the maybe slice, co-keyed on (key, bucket)
+        # so both sides hash identically in the shuffle; no broadcast hint —
+        # AQE broadcasts the key side when its runtime size allows
+        survivors = maybe.join(
+            keys.withColumn("__bucket", bucket), on=[key_col, "__bucket"], how="left_anti"
+        )
         return definite_new.unionByName(survivors).drop("__bucket", "__maybe")
-
-    # keys above which the exact side must NOT be broadcast: ~32-char md5
-    # keys, ~5M rows ≈ 300MB of broadcast payload is the ceiling; beyond it
-    # the anti-join runs as a shuffle (bucket-colocated sort-merge — both
-    # sides already carry the bucket column, so AQE keeps it narrow)
-    broadcast_max_keys: int = 5_000_000
-
-    def _small(self, n_seen: int | None) -> bool:
-        return n_seen is not None and n_seen <= self.broadcast_max_keys

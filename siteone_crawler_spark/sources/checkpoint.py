@@ -12,8 +12,11 @@ capability the north rule adds.
 
 Layout:
     root/manifest.json                  {"last_wave": K, "done": bool, ...}
-    root/<table>/wave=K/part-*.parquet  per-wave appends (frontier, visited,
-                                        skipped, events, metrics, blooms)
+    root/<table>/wave=K/part-*.parquet  per-wave appends, one flat dir per
+                                        (table, wave) — see TABLES
+
+The frontier log doubles as the exact URL-seen set: the engine reads it back
+as a url_key-only projection (read_all_partitioned).
 
 A wave K is visible iff manifest.last_wave >= K, so a crash between table
 writes and the manifest bump simply replays wave K on resume — writes are
@@ -24,10 +27,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = ("frontier", "seen", "visited", "skipped", "events", "metrics", "blooms")
+TABLES = (
+    "frontier", "deferred", "visited", "skipped", "basename_events", "metrics",
+    "lineage", "blooms",
+)
+
+# Spark DDL type -> Arrow type, for the driver-side rows write_table accepts
+_ARROW_TYPES = {
+    "int": "int32", "long": "int64", "bigint": "int64", "double": "float64",
+    "string": "string", "binary": "binary", "boolean": "bool",
+}
 
 
 class CheckpointStore:
@@ -62,47 +75,75 @@ class CheckpointStore:
     def _wave_dir(self, table: str, wave: int) -> str:
         return os.path.join(self.root, table, f"wave={wave}")
 
+    def _parquet_files(self, table: str, wave: int) -> list[str]:
+        """Sorted parquet file paths of one wave dir ([] when missing). An
+        empty-DataFrame write can leave the dir with zero files — readers
+        must skip such dirs, which alone fail schema inference."""
+        d = self._wave_dir(table, wave)
+        if not os.path.isdir(d):
+            return []
+        return [
+            os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+        ]
+
     def write_table(
         self,
         table: str,
         wave: int,
-        df: DataFrame,
+        df: DataFrame | list[tuple],
         max_files: int = 1,
-        partition_by: str | None = None,
+        schema: str | None = None,
     ) -> None:
         """Per-wave state tables are small relative to the docs corpus; cap
         output files so later multi-wave scans don't fragment into hundreds
         of tiny-file partitions. At cluster scale `max_files` would instead be
-        sized to keep ~128MB per file. `partition_by` lays the wave out as
-        hive-style subdirectories (the seen table partitions by bucket so
-        the exact anti-join can partition-prune)."""
-        w = df.coalesce(max_files).write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(self._wave_dir(table, wave))
+        sized to keep ~128MB per file.
+
+        `df` may instead be rows the driver already holds (metrics, lineage,
+        blooms), typed by the DDL `schema`: those are written by pyarrow as
+        one file, with no Spark job, and read back by Spark as the same
+        column types."""
+        d = self._wave_dir(table, wave)
+        if isinstance(df, DataFrame):
+            df.coalesce(max_files).write.mode("overwrite").parquet(d)
+            return
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        fields = [f.split() for f in schema.split(",")]
+        cols = list(zip(*df)) or [()] * len(fields)
+        arrow = pa.table(
+            {name: pa.array(col, type=_ARROW_TYPES[t]) for (name, t), col in zip(fields, cols)}
+        )
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        tmp = os.path.join(d, ".part-00000.parquet.tmp")
+        pq.write_table(arrow, tmp)
+        os.replace(tmp, os.path.join(d, "part-00000.parquet"))
+
+    def _reader(self, schema: str | None):
+        """A declared schema skips Spark's schema inference (a footer read
+        that costs about as much driver time as a small job); callers pass
+        the DDL the table was written with."""
+        r = self.spark.read
+        return r if schema is None else r.schema(schema)
 
     def read_wave(self, table: str, wave: int, schema: str | None = None) -> DataFrame:
         d = self._wave_dir(table, wave)
-        if not self._has_parquet(d):
+        if not self._parquet_files(table, wave):
             if schema is None:
                 raise FileNotFoundError(d)
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(d)
+        return self._reader(schema).parquet(d)
 
     def count_rows(self, table: str, wave: int) -> int:
         """Row count from parquet footers (driver-side metadata read — no
-        Spark job). Recursive: partitioned tables nest bucket=* subdirs."""
+        Spark job)."""
         import pyarrow.parquet as pq
 
-        d = self._wave_dir(table, wave)
-        if not os.path.isdir(d):
-            return 0
-        total = 0
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
+        return sum(
+            pq.ParquetFile(p).metadata.num_rows for p in self._parquet_files(table, wave)
+        )
 
     def has_wave(self, table: str, wave: int) -> bool:
         """Whether a wave of `table` was ever written (even empty). Iceberg
@@ -117,13 +158,8 @@ class CheckpointStore:
         the caller's predicate from column stats) instead of POSIX listings."""
         import pyarrow.parquet as pq
 
-        d = self._wave_dir(table, wave)
-        if not os.path.isdir(d):
-            return
-        for root, _dirs, files in os.walk(d):
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    yield pq.read_table(os.path.join(root, fn), columns=columns)
+        for p in self._parquet_files(table, wave):
+            yield pq.read_table(p, columns=columns)
 
     def min_stat(self, table: str, wave: int, column: str):
         """Minimum value of `column` over a wave dir, from parquet row-group
@@ -131,14 +167,9 @@ class CheckpointStore:
         Returns None when the dir is missing, empty, or stats are absent."""
         import pyarrow.parquet as pq
 
-        d = self._wave_dir(table, wave)
-        if not os.path.isdir(d):
-            return None
         mn = None
-        for f in os.listdir(d):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(d, f)).metadata
+        for p in self._parquet_files(table, wave):
+            md = pq.ParquetFile(p).metadata
             try:
                 idx = md.schema.names.index(column)
             except ValueError:
@@ -158,48 +189,20 @@ class CheckpointStore:
 
         rows: list[tuple] = []
         for t in tables:
-            d = self._wave_dir(t, wave)
-            if not os.path.isdir(d):
-                continue
-            for fn in sorted(os.listdir(d)):
-                if fn.endswith(".parquet"):
-                    p = os.path.join(d, fn)
-                    rows.append(
-                        (wave, t, fn, pq.ParquetFile(p).metadata.num_rows, os.path.getsize(p))
-                    )
+            for p in self._parquet_files(t, wave):
+                rows.append(
+                    (wave, t, os.path.basename(p), pq.ParquetFile(p).metadata.num_rows,
+                     os.path.getsize(p))
+                )
         return rows
 
     def read_all_partitioned(
         self, table: str, upto_wave: int, schema: str, columns: list[str]
     ) -> DataFrame:
-        """read_all for hive-partitioned tables (e.g. seen's bucket=K dirs):
-        a shared basePath makes Spark treat wave and bucket as partition
-        columns consistently across the committed wave roots; `columns`
-        projects away the wave partition column."""
-        dirs = [
-            self._wave_dir(table, w)
-            for w in range(upto_wave + 1)
-            if self._has_parquet(self._wave_dir(table, w))
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.option("basePath", os.path.join(self.root, table))
-            .parquet(*dirs)
-            .select(*columns)
-        )
-
-    @staticmethod
-    def _has_parquet(d: str) -> bool:
-        """True when the dir holds at least one parquet file (possibly under
-        hive-partition subdirs). An empty-DataFrame write creates the dir but
-        zero files — reading such dirs alone fails schema inference."""
-        if not os.path.isdir(d):
-            return False
-        for _root, _dirs, files in os.walk(d):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        """read_all projected to `columns`: the parquet scan reads only those
+        column chunks across the committed wave=K dirs. The engine's exact
+        URL-seen set is this scan over the frontier log with ["url_key"]."""
+        return self.read_all(table, upto_wave, schema).select(*columns)
 
     def read_all(self, table: str, upto_wave: int, schema: str | None = None) -> DataFrame:
         """Union of committed waves 0..upto_wave (single multi-path parquet
@@ -207,10 +210,10 @@ class CheckpointStore:
         dirs = [
             self._wave_dir(table, w)
             for w in range(upto_wave + 1)
-            if self._has_parquet(self._wave_dir(table, w))
+            if self._parquet_files(table, w)
         ]
         if not dirs:
             if schema is None:
                 raise FileNotFoundError(f"{table} has no committed waves")
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*dirs)
+        return self._reader(schema).parquet(*dirs)

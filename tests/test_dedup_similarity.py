@@ -59,6 +59,10 @@ def test_minhash_deterministic(docs):
 def test_simhash(docs):
     from siteone_crawler_spark.operators.dedup import simhash64, simhash_near_pairs
 
+    # the default md5 kernel is pure Catalyst too: no Python stage in the plan
+    plan = simhash64(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "ArrowEval" not in plan
+
     fp = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
     assert fp[1] == fp[2]  # same tokens after normalization
     ham_13 = bin((fp[1] ^ fp[3]) & (2**64 - 1)).count("1")

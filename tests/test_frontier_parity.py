@@ -120,13 +120,21 @@ def test_parity_larger_site(spark, tmp_path):
     assert_parity(sim, tables)
 
 
-def test_resume_bit_identical(spark, tmp_path):
-    """Kill after 2 waves, resume, and compare every table to an
-    uninterrupted run — the resumability the reference lacks (R3)."""
+@pytest.fixture(scope="module")
+def resume_site_full(spark, tmp_path_factory):
+    """The resume tests' site, config and uninterrupted crawl (one crawl,
+    shared): (site, cfg, checkpoint dir, tables)."""
     site = generate_site(seed=3, n_hosts=2, docs_per_host=15)
     cfg = CrawlConfig(allowed_domains=("*.example.test",))
+    root = tmp_path_factory.mktemp("resume_full")
+    _, full = run_engine(spark, site, cfg, root)
+    return site, cfg, root, full
 
-    _, full = run_engine(spark, site, cfg, tmp_path / "full")
+
+def test_resume_bit_identical(spark, tmp_path, resume_site_full):
+    """Kill after 2 waves, resume, and compare every table to an
+    uninterrupted run — the resumability the reference lacks (R3)."""
+    site, cfg, _root, full = resume_site_full
 
     # interrupted: stop after 2 waves, then resume with a FRESH engine
     docs, meta, robots, seeds = site_to_dfs(spark, site)
@@ -137,6 +145,50 @@ def test_resume_bit_identical(spark, tmp_path):
     resumed = e2.run(docs, meta, site.robots, site.seeds)
     assert e2.store.read_manifest()["done"]
 
+    for t in ("visited", "frontier", "skipped"):
+        a = sorted(map(tuple, full[t].collect()))
+        b = sorted(map(tuple, resumed[t].collect()))
+        assert a == b, f"table {t} differs after resume"
+
+
+def test_engine_bloom_forced_crawl_parity(spark, tmp_path):
+    """Full engine crawl with the Bloom prefilter FORCED on from the first
+    wave (bloom_min_keys=1): the prefiltered anti-join must reproduce the
+    simulator exactly."""
+    site = generate_site(seed=42, n_hosts=2, docs_per_host=20)
+    cfg = CrawlConfig(allowed_domains=("*.example.test",))
+    sim = simulate(site, cfg)
+    docs, meta, _r, _s = site_to_dfs(spark, site)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ckpt"), n_buckets=8)
+    eng.seen.bloom_min_keys = 1
+    tables = eng.run(docs, meta, site.robots, site.seeds)
+    assert eng.seen.prefilter.bits, "the Bloom prefilter must have been built"
+    assert_parity(sim, tables)
+
+
+def test_bloom_forced_resume_bit_identical(spark, tmp_path, resume_site_full):
+    """Kill-and-resume with the Bloom prefilter forced on restores it from
+    the checkpointed `blooms` table and rebuilds the exact seen set from the
+    frontier log alone — the checkpoint holds no separate seen table. The
+    prefilter never changes the crawl, so the resumed tables must equal the
+    uninterrupted unfiltered run's."""
+    site, cfg, full_root, full = resume_site_full
+    docs, meta, _r, _s = site_to_dfs(spark, site)
+
+    def engine():
+        eng = CrawlEngine(spark, cfg, str(tmp_path / "part"), n_buckets=8)
+        eng.seen.bloom_min_keys = 1
+        return eng
+
+    e1 = engine()
+    e1.run(docs, meta, site.robots, site.seeds, max_waves=2)
+    assert not e1.store.read_manifest()["done"]
+    e2 = engine()
+    resumed = e2.run(docs, meta, site.robots, site.seeds)
+    assert e2.store.read_manifest()["done"]
+    assert e2.seen.prefilter.bits
+    for root in (full_root, tmp_path / "part"):
+        assert not (root / "seen").exists()
     for t in ("visited", "frontier", "skipped"):
         a = sorted(map(tuple, full[t].collect()))
         b = sorted(map(tuple, resumed[t].collect()))

@@ -1,25 +1,35 @@
-"""Recrawl/invalidation: CrawlEngine.invalidate + SeenSet.remove."""
+"""Recrawl/invalidation: CrawlEngine.invalidate + crawl_diff."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from siteone_crawler_spark.config import CrawlConfig
 from siteone_crawler_spark.engine import CrawlEngine
 from siteone_crawler_spark.generator import generate_site, site_to_dfs
 
 
-def _crawl(spark, site, cfg, ckpt):
-    docs, meta, _r, _s = site_to_dfs(spark, site)
+def _engine(spark, cfg, ckpt, bloom_min_keys=None):
     eng = CrawlEngine(spark, cfg, str(ckpt), n_buckets=8)
+    if bloom_min_keys is not None:
+        eng.seen.bloom_min_keys = bloom_min_keys
+    return eng
+
+
+def _crawl(spark, site, cfg, ckpt, bloom_min_keys=None):
+    docs, meta, _r, _s = site_to_dfs(spark, site)
+    eng = _engine(spark, cfg, ckpt, bloom_min_keys)
     tables = eng.run(docs, meta, site.robots, site.seeds)
     return eng, docs, meta, tables
 
 
-@pytest.mark.parametrize("arm", ["bloom", "cuckoo"])
-def test_invalidate_recrawls_exactly_the_batch(spark, tmp_path, arm):
+@pytest.mark.parametrize("seen_path", ["exact", "bloom"])
+def test_invalidate_recrawls_exactly_the_batch(spark, tmp_path, seen_path):
+    """`exact`: the seen set stays below bloom_min_keys (broadcast exact
+    anti-join). `bloom`: the Bloom prefilter is forced on, so the recrawl
+    also restores it from the checkpointed `blooms` table."""
     site = generate_site(seed=42, n_hosts=2, docs_per_host=15)
-    cfg = CrawlConfig(allowed_domains=("*.example.test",), seen_filter=arm)
-    eng, docs, meta, t1 = _crawl(spark, site, cfg, tmp_path / arm)
+    cfg = CrawlConfig(allowed_domains=("*.example.test",))
+    bloom_min_keys = 1 if seen_path == "bloom" else None
+    eng, docs, meta, t1 = _crawl(spark, site, cfg, tmp_path / "c", bloom_min_keys)
 
     v1 = t1["visited"].select("url", "seq", "wave", "status_code").collect()
     assert len(v1) > 5
@@ -30,8 +40,9 @@ def test_invalidate_recrawls_exactly_the_batch(spark, tmp_path, arm):
     n = eng.invalidate(targets + ["https://nowhere.example.test/ghost"])
     assert n == 3  # unknown URLs don't match
 
-    e2 = CrawlEngine(spark, cfg, str(tmp_path / arm), n_buckets=8)
+    e2 = _engine(spark, cfg, tmp_path / "c", bloom_min_keys)
     t2 = e2.run(docs, meta, site.robots, site.seeds)
+    assert bool(e2.seen.prefilter.bits) == (seen_path == "bloom")
 
     v2 = t2["visited"].select("url", "seq", "wave", "status_code").collect()
     # the recrawl log: original rows intact + exactly one new row per target
@@ -56,44 +67,6 @@ def test_invalidate_requires_done(spark, tmp_path):
     eng.run(docs, meta, site.robots, site.seeds, max_waves=1)
     with pytest.raises(ValueError):
         eng.invalidate(["https://h0.example.test/"])  # not done yet
-
-
-@pytest.mark.parametrize("arm", ["bloom", "cuckoo"])
-def test_seen_remove_reschedulable_both_arms(spark, arm):
-    """After remove(), filter_new admits the keys again on BOTH arms (a
-    stale bloom positive only routes into the exact join, which misses)."""
-    import hashlib
-
-    from siteone_crawler_spark.operators.seen import SeenSet, key_bucket
-
-    # real md5 keys: degenerate fixed-width hex ints all share one cuckoo
-    # (row, fp) cell, making deletes indistinguishable by design
-    mk = lambda i: hashlib.md5(f"inv-{i}".encode()).hexdigest()  # noqa: E731
-
-    seen = SeenSet(spark, n_buckets=4, kind=arm, cuckoo_rows_per_bucket=1 << 11)
-    seen.bloom_min_keys = 1  # force the prefilter path
-    keys = spark.createDataFrame(
-        [(mk(i),) for i in range(300)], "url_key string"
-    )
-    seen._keys = keys.withColumn("bucket", key_bucket(F.col("url_key"), 4))
-    seen.absorb(seen._keys, 300)
-
-    victims = spark.createDataFrame(
-        [(mk(i),) for i in range(100)], "url_key string"
-    )
-    seen.remove(victims)
-
-    cands = spark.createDataFrame(
-        [(mk(i),) for i in range(300)], "url_key string"
-    )
-    got = {r["url_key"] for r in seen.filter_new(cands, n_seen=200).collect()}
-    assert got == {mk(i) for i in range(100)}
-    if arm == "cuckoo":
-        # the cuckoo arm also cleans the prefilter: victims now miss it
-        import pandas as pd
-
-        pdf = victims.withColumn("bucket", key_bucket(F.col("url_key"), 4)).toPandas()
-        assert seen.prefilter.contains(pdf).mean() < 0.05
 
 
 def test_crawl_diff_summarizes_generations(spark, tmp_path):

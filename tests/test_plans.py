@@ -35,27 +35,24 @@ def test_first_wins_dedup_is_hash_aggregate(spark):
 
 
 def test_seen_exact_side_not_broadcast_above_threshold(spark):
-    """What's-wrong #3: _small() must respect the key-count threshold."""
+    """What's-wrong #3: only the below-threshold path hints a broadcast."""
     from siteone_crawler_spark.operators.seen import SeenSet, key_bucket
 
     seen = SeenSet(spark, n_buckets=4)
-    seen._keys = (
-        spark.range(2000)
-        .select(F.md5(F.col("id").cast("string")).alias("url_key"))
-        .withColumn("bucket", key_bucket(F.col("url_key"), 4))
+    seen._keys = spark.range(2000).select(
+        F.md5(F.col("id").cast("string")).alias("url_key")
     )
     cand = _candidates(spark).withColumn("url_key", F.md5("url_key"))
-
-    assert seen._small(1000) and seen._small(5_000_000)
-    assert not seen._small(5_000_001) and not seen._small(10**10)
 
     small = seen.filter_new(cand, n_seen=1000)
     assert has_broadcast_join(small)
 
-    # above the bloom threshold AND the broadcast ceiling there is no FORCED
-    # broadcast hint — with auto-broadcast off (as cost stats would dictate
-    # at 10^10 keys) the exact anti-join must plan as a shuffle join
-    seen.bloom.add_keys(seen._keys.toPandas())
+    # above the bloom threshold there is no FORCED broadcast hint — with
+    # auto-broadcast off (as cost stats would dictate at 10^10 keys) the
+    # exact anti-join must plan as a shuffle join
+    seen.prefilter.add_keys(
+        seen._keys.withColumn("bucket", key_bucket(F.col("url_key"), 4)).toPandas()
+    )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
