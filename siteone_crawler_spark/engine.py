@@ -9,7 +9,7 @@ shared DashMap state) as deterministic Spark dataflow. One wave =
       → explode spans → resolve/canonicalize   (pandas UDF, crawler.rs:1020+)
       → host / breaker / robots / regex /      (enqueue pipeline,
         suitability filters                     crawler.rs:1055-1306)
-      → anti-join seen (bloom + exact key scan) (crawler.rs:1287-1297)
+      → anti-join seen (Bloom join + exact key scan) (crawler.rs:1287-1297)
       → first-wins dedup + deterministic rank   (crawler.rs:1232-1242)
       → caps → frontier(K+1), visited, skipped, events, metrics
       → checkpoint commit (atomic manifest bump)
@@ -21,7 +21,9 @@ State tables (sources/checkpoint.py):
              enqueue == dequeue sequence).
   deferred   politeness-deferred pending rows, indexed by the wave that will
              process them (empty in parity mode).
-  visited / skipped / events / metrics / blooms  as named.
+  blooms     the Bloom prefilter's (bucket, word, bits) rows as of each
+             frontier wave; resume points the prefilter at the last one.
+  visited / skipped / events / metrics  as named.
 
 Crawl order parity: the reference's FIFO queue yields enqueue order ==
 dequeue order; we reproduce it by ranking each wave's accepted candidates by
@@ -34,8 +36,9 @@ Scale notes (local[32] here, 1000 executors in spirit):
     (resolve, robots) and one narrow applyInPandas (breaker, only over
     at-risk basename groups);
   - the wave rank avoids a single-partition window (operators/ordering.py);
-  - seen-set dedup is Bloom-prefiltered above SeenSet.bloom_min_keys keys,
-    so only maybe-seen candidates join the exact keys (operators/seen.py);
+  - seen-set dedup is Bloom-prefiltered above SeenSet.bloom_min_keys keys
+    by a broadcast join on word-blocked filter rows (no Python), so only
+    maybe-seen candidates join the exact keys (operators/seen.py);
   - every wave's state lands in the checkpoint store, so lineage is cut per
     wave (no ever-growing plan) and a killed run resumes bit-identically;
   - between crawls, invalidate(urls) re-queues already-crawled URLs through
@@ -89,7 +92,7 @@ EVENTS_SCHEMA = "basename string, seq long"
 BN_STATE_SCHEMA = "basename string, evt_seqs array<bigint>, n_events long"
 METRICS_SCHEMA = "wave int, stage string, rows long"
 LINEAGE_SCHEMA = "wave int, table string, file string, n_rows long, n_bytes long"
-BLOOMS_SCHEMA = "bucket int, bits binary"
+BLOOMS_SCHEMA = "bucket int, word int, bits long"
 
 
 def _wildcard_to_java_regex(pattern: str) -> str:
@@ -170,7 +173,6 @@ class CrawlEngine:
         self._wave_caches: list[DataFrame] = []
         self._wave_seq_start: dict[int, int] = {}
         self._min_pending_seq: int | None = None
-        self._bloom_ready = False
         # basename-breaker state lives in a checkpointed Spark table
         # (basename string, evt_seqs array<bigint>, n_events long), NOT on
         # the driver: a 404 long tail of distinct failing basenames is
@@ -316,7 +318,7 @@ class CrawlEngine:
         self._wave_seq_start[0] = 0
         self.n_enqueued = n
         if n >= self.seen.bloom_min_keys:
-            self._bloom_absorb(self.seen.keys, n)
+            self._checkpoint_prefilter(0)
 
     def _restore_state(self, last_wave: int) -> None:
         # frontier rows discovered while processing last_wave live at index
@@ -344,16 +346,12 @@ class CrawlEngine:
             self._bn_state_max = self._bn_max(w0)
         for w in range(w0 + 1, last_wave + 1):
             self._absorb_events(w)
-        bloom_rows = self.store.read_wave(
-            "blooms", last_wave + 1, BLOOMS_SCHEMA
-        ).collect()
-        if bloom_rows:
-            self.seen.restore_prefilter(
-                [(r["bucket"], r["bits"]) for r in bloom_rows]
+        if self.store.has_wave("blooms", last_wave + 1):
+            self.seen.prefilter = self.store.read_wave(
+                "blooms", last_wave + 1, BLOOMS_SCHEMA
             )
-            self._bloom_ready = True
         elif self.n_enqueued >= self.seen.bloom_min_keys:
-            self._bloom_absorb(self.seen.keys, self.n_enqueued)
+            self.seen.absorb(self.seen.keys)
 
     def _pending(self, wave: int) -> DataFrame:
         newly = self.store.read_wave("frontier", wave, FRONTIER_SCHEMA)
@@ -849,21 +847,10 @@ class CrawlEngine:
         # committed frontier waves
         self.seen._keys = self._seen_keys(wave)
 
-        # bloom maintenance only once the seen set is big enough to pay for
-        # it (below that, filter_new broadcast-anti-joins the exact keys):
-        # the first build folds the ENTIRE seen set, later waves only their
-        # own key slice; bitsets are built DISTRIBUTED per bucket above a
-        # small slice, only blobs hit the driver
+        # prefilter maintenance only once the seen set is big enough to pay
+        # for it (below that, filter_new broadcast-anti-joins the exact keys)
         if self.n_enqueued >= self.seen.bloom_min_keys:
-            if self._bloom_ready:
-                self._bloom_absorb(
-                    self.store.read_wave("frontier", wave, FRONTIER_SCHEMA), n_new
-                )
-            else:
-                self._bloom_absorb(self.seen.keys, self.n_enqueued)
-            self.store.write_table(
-                "blooms", wave, self.seen.prefilter_rows(), schema=BLOOMS_SCHEMA
-            )
+            self._checkpoint_prefilter(wave)
             _sub("bloom")
         return n_new
 
@@ -873,12 +860,17 @@ class CrawlEngine:
             "frontier", upto_wave, FRONTIER_SCHEMA, ["url_key"]
         )
 
-    def _bloom_absorb(self, src: DataFrame, slice_rows: int) -> None:
-        """Fold a url_key slice into the Bloom prefilter (the driver-vs-
-        distributed build cutoff lives behind SeenSet.absorb). Shared by the
-        per-wave path, external seeding, and resume."""
-        self.seen.absorb(src, slice_rows)
-        self._bloom_ready = True
+    def _checkpoint_prefilter(self, wave: int) -> None:
+        """Fold frontier wave `wave` into the Bloom prefilter (the whole seen
+        set on the first build), write it as the `blooms` table's wave, and
+        point the prefilter at that scan: lineage is cut per wave and resume
+        reads the rows back as they are."""
+        if self.seen.prefilter is None:
+            self.seen.absorb(self.seen.keys)
+        else:
+            self.seen.absorb(self.store.read_wave("frontier", wave, FRONTIER_SCHEMA))
+        self.store.write_table("blooms", wave, self.seen.prefilter)
+        self.seen.prefilter = self.store.read_wave("blooms", wave, BLOOMS_SCHEMA)
 
     @staticmethod
     def _nfiles(n_rows: int) -> int:

@@ -39,7 +39,7 @@ TABLES = (
 # Spark DDL type -> Arrow type, for the driver-side rows write_table accepts
 _ARROW_TYPES = {
     "int": "int32", "long": "int64", "bigint": "int64", "double": "float64",
-    "string": "string", "binary": "binary", "boolean": "bool",
+    "string": "string", "boolean": "bool",
 }
 
 
@@ -99,8 +99,8 @@ class CheckpointStore:
         of tiny-file partitions. At cluster scale `max_files` would instead be
         sized to keep ~128MB per file.
 
-        `df` may instead be rows the driver already holds (metrics, lineage,
-        blooms), typed by the DDL `schema`: those are written by pyarrow as
+        `df` may instead be rows the driver already holds (metrics,
+        lineage), typed by the DDL `schema`: those are written by pyarrow as
         one file, with no Spark job, and read back by Spark as the same
         column types."""
         d = self._wave_dir(table, wave)

@@ -33,7 +33,6 @@ DRIVER_TABLES = {
         [(1, "visited", "part-00000.parquet", 7, 2048),
          (1, "frontier", "part-00001.parquet", 0, 512)],
     ),
-    "blooms": (BLOOMS_SCHEMA, [(0, b"\x00\xff" * 8), (3, bytes(16))]),
 }
 
 
@@ -51,9 +50,7 @@ def _frontier(spark, ids, wave: int = 0, seq0: int = 0):
 
 
 def _plain(rows):
-    return sorted(
-        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in rows
-    )
+    return sorted(map(tuple, rows))
 
 
 def _fields(df):
@@ -108,12 +105,12 @@ def test_driver_rows_overwrite_whole_wave(spark, tmp_path):
 
 
 def test_lineage_counts_driver_written_file(spark, tmp_path):
-    ddl, rows = DRIVER_TABLES["blooms"]
+    ddl, rows = DRIVER_TABLES["lineage"]
     store = CheckpointStore(spark, str(tmp_path))
-    store.write_table("blooms", 4, rows, schema=ddl)
-    [(wave, table, name, n_rows, n_bytes)] = store.collect_lineage(4, ("blooms",))
-    assert (wave, table, name, n_rows) == (4, "blooms", "part-00000.parquet", 2)
-    assert n_bytes == os.path.getsize(os.path.join(store._wave_dir("blooms", 4), name))
+    store.write_table("lineage", 4, rows, schema=ddl)
+    [(wave, table, name, n_rows, n_bytes)] = store.collect_lineage(4, ("lineage",))
+    assert (wave, table, name, n_rows) == (4, "lineage", "part-00000.parquet", 2)
+    assert n_bytes == os.path.getsize(os.path.join(store._wave_dir("lineage", 4), name))
 
 
 def test_frontier_key_scan_projects_committed_waves(spark, tmp_path):
@@ -163,11 +160,12 @@ def test_seed_frontier_casts_and_installs_seen_keys(spark, tmp_path):
 
 def test_seed_frontier_above_threshold_builds_prefilter(spark, tmp_path):
     """At or above bloom_min_keys the seeded keys fold into the Bloom
-    prefilter; filter_new then drops exactly the seeded keys."""
+    prefilter, checkpointed as blooms wave 0; filter_new then drops exactly
+    the seeded keys."""
     eng = _engine(spark, tmp_path)
     eng.seen.bloom_min_keys = 1
     eng.seed_frontier(_frontier(spark, range(6)))
-    assert eng._bloom_ready
+    assert eng.store.count_rows("blooms", 0) > 0
     cand = spark.createDataFrame([(_key(i),) for i in (0, 5, 98, 99)], "url_key string")
     got = {r[0] for r in eng.seen.filter_new(cand, n_seen=eng.n_enqueued).collect()}
     assert got == {_key(98), _key(99)}
@@ -191,7 +189,7 @@ def test_restore_counts_enqueued_from_frontier_footers(spark, tmp_path):
     assert fresh.n_enqueued == 8
     assert fresh._wave_seq_start[1] == 5
     assert sorted(r[0] for r in fresh.seen.keys.collect()) == sorted(map(_key, range(8)))
-    assert not fresh._bloom_ready
+    assert fresh.seen.prefilter is None
 
 
 def test_restore_rebuilds_prefilter_without_blooms_table(spark, tmp_path):
@@ -201,23 +199,30 @@ def test_restore_rebuilds_prefilter_without_blooms_table(spark, tmp_path):
     fresh = _engine(spark, tmp_path)
     fresh.seen.bloom_min_keys = 1
     fresh._restore_state(0)
-    assert fresh._bloom_ready
+    assert fresh.seen.prefilter is not None
+    assert not fresh.store.has_wave("blooms", 1)  # restore writes nothing
     cand = spark.createDataFrame([(_key(i),) for i in (0, 7, 99)], "url_key string")
     got = {r[0] for r in fresh.seen.filter_new(cand, n_seen=fresh.n_enqueued).collect()}
     assert got == {_key(99)}
 
 
 def test_restore_reads_checkpointed_blooms(spark, tmp_path):
-    """Checkpointed blooms are restored byte for byte, not rebuilt from the
-    frontier keys (the checkpointed filter here holds a different key set)."""
+    """Resume points the prefilter at the checkpointed blooms rows as
+    written, not at a rebuild from the frontier keys (the checkpointed
+    filter here holds a different key set)."""
     eng = _two_wave_checkpoint(spark, tmp_path)
     ref = SeenSet(spark, n_buckets=4)
-    ref.absorb(_frontier(spark, [0, 1, 50]), 3)
-    eng.store.write_table("blooms", 1, ref.prefilter_rows(), schema=BLOOMS_SCHEMA)
+    ref.absorb(_frontier(spark, [0, 1, 50]))
+    eng.store.write_table("blooms", 1, ref.prefilter)
+    written = _plain(eng.store.read_wave("blooms", 1, BLOOMS_SCHEMA).collect())
+    rebuilt = SeenSet(spark, n_buckets=4)
+    rebuilt.absorb(_frontier(spark, range(8)))
+    assert _plain(rebuilt.prefilter.collect()) != written
     fresh = _engine(spark, tmp_path)
     fresh._restore_state(0)
-    assert fresh._bloom_ready
-    assert _plain(fresh.seen.prefilter_rows()) == _plain(ref.prefilter_rows())
+    assert _plain(fresh.seen.prefilter.collect()) == written
+    plan = explain_str(fresh.seen.prefilter)
+    assert "blooms" in plan and "frontier" not in plan, plan
 
 
 def test_bn_max_reads_footer_column(spark, tmp_path):

@@ -42,7 +42,8 @@ def test_invalidate_recrawls_exactly_the_batch(spark, tmp_path, seen_path):
 
     e2 = _engine(spark, cfg, tmp_path / "c", bloom_min_keys)
     t2 = e2.run(docs, meta, site.robots, site.seeds)
-    assert bool(e2.seen.prefilter.bits) == (seen_path == "bloom")
+    blooms = e2.store.count_rows("blooms", e2.store.read_manifest()["last_wave"] + 1)
+    assert (blooms > 0) == (seen_path == "bloom")
 
     v2 = t2["visited"].select("url", "seq", "wave", "status_code").collect()
     # the recrawl log: original rows intact + exactly one new row per target

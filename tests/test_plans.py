@@ -35,8 +35,9 @@ def test_first_wins_dedup_is_hash_aggregate(spark):
 
 
 def test_seen_exact_side_not_broadcast_above_threshold(spark):
-    """What's-wrong #3: only the below-threshold path hints a broadcast."""
-    from siteone_crawler_spark.operators.seen import SeenSet, key_bucket
+    """What's-wrong #3: only the below-threshold path hints a broadcast of
+    the exact keys; above it the only broadcast is the prefilter's."""
+    from siteone_crawler_spark.operators.seen import SeenSet
 
     seen = SeenSet(spark, n_buckets=4)
     seen._keys = spark.range(2000).select(
@@ -47,19 +48,25 @@ def test_seen_exact_side_not_broadcast_above_threshold(spark):
     small = seen.filter_new(cand, n_seen=1000)
     assert has_broadcast_join(small)
 
-    # above the bloom threshold there is no FORCED broadcast hint — with
-    # auto-broadcast off (as cost stats would dictate at 10^10 keys) the
-    # exact anti-join must plan as a shuffle join
-    seen.prefilter.add_keys(
-        seen._keys.withColumn("bucket", key_bucket(F.col("url_key"), 4)).toPandas()
-    )
+    # above the bloom threshold there is no FORCED broadcast hint on the
+    # exact keys — with auto-broadcast off (as cost stats would dictate at
+    # 10^10 keys) the exact anti-join must plan as a shuffle join; the
+    # prefilter's (bucket, word) rows are the only broadcast side
+    seen.absorb(seen._keys)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         big = seen.filter_new(cand, n_seen=6_000_000)
         plan = explain_str(big, "simple")
-        assert "BroadcastHashJoin" not in plan, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+        exact = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+        assert exact and all(
+            "url_key" in ln and ("SortMergeJoin" in ln or "ShuffledHashJoin" in ln)
+            for ln in exact
+        ), plan
+        bhj = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+        assert bhj and all(
+            "__word" in ln and "url_key" not in ln for ln in bhj
+        ), plan
         # and the small side DOES keep its explicit broadcast below the bar
         small2 = seen.filter_new(cand, n_seen=1000)
         assert "BroadcastHashJoin" in explain_str(small2, "simple")

@@ -4,39 +4,57 @@ global-sequence operator."""
 import pyspark.sql.functions as F
 
 
-def test_bloom_state_roundtrip():
-    import pandas as pd
+def _md5_keys(spark, lo, hi):
+    return spark.range(lo, hi).select(F.md5(F.col("id").cast("string")).alias("url_key"))
 
-    from siteone_crawler_spark.operators.seen import BloomState
 
-    st = BloomState(n_buckets=4, bits_per_bucket=1 << 12, k=5)
-    keys = [f"{i:032x}" for i in range(500)]
-    pdf = pd.DataFrame({"url_key": keys, "bucket": [i % 4 for i in range(500)]})
-    st.add_keys(pdf)
-    # no false negatives, ever
-    assert st.contains(pdf).all()
-    # serialization roundtrip preserves membership
-    st2 = BloomState.from_rows(st.to_rows(), 4, 1 << 12, 5)
-    assert st2.contains(pdf).all()
-    # unseen keys mostly miss (FPR sanity, not exactness)
-    other = pd.DataFrame(
-        {"url_key": [f"{i + 10_000:032x}" for i in range(500)], "bucket": [i % 4 for i in range(500)]}
-    )
-    assert st.contains(other).mean() < 0.2
+def test_blocked_bloom_native_roundtrip(spark, tmp_path):
+    """The word-blocked prefilter: no false negatives, a small false-positive
+    rate on fresh keys, the same rows and verdicts after a `blooms`
+    checkpoint write/read, and a bloom-arm filter_new plan with no Python."""
+    from siteone_crawler_spark.engine import BLOOMS_SCHEMA
+    from siteone_crawler_spark.operators.seen import SeenSet
+    from siteone_crawler_spark.plans import explain_str
+    from siteone_crawler_spark.sources.checkpoint import CheckpointStore
+
+    seen = SeenSet(spark, n_buckets=8)
+    seen._keys = _md5_keys(spark, 0, 20_000)
+    fresh = _md5_keys(spark, 20_000, 70_000)
+    seen.absorb(seen.keys)
+
+    def verdicts():
+        miss = seen.maybe_seen(seen.keys).filter(~F.col("__maybe")).count()
+        return miss, seen.maybe_seen(fresh).filter(F.col("__maybe")).count()
+
+    false_neg, false_pos = verdicts()
+    assert false_neg == 0
+    assert false_pos < 50  # FPR < 1e-3; about 1e-4 expected at 1.2 keys/word
+
+    store = CheckpointStore(spark, str(tmp_path))
+    store.write_table("blooms", 0, seen.prefilter)
+    rows = sorted(map(tuple, seen.prefilter.collect()))
+    seen.prefilter = store.read_wave("blooms", 0, BLOOMS_SCHEMA)
+    assert sorted(map(tuple, seen.prefilter.collect())) == rows
+    assert verdicts() == (false_neg, false_pos)
+
+    seen.bloom_min_keys = 1
+    out = seen.filter_new(seen.keys.unionByName(fresh), n_seen=20_000)
+    assert len(out.collect()) == 50_000
+    plan = explain_str(out)  # the executed (final adaptive) plan
+    assert "isFinalPlan=true" in plan and "__word" in plan, plan
+    assert "Python" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_seen_filter_new_bloom_and_exact_paths(spark):
-    from siteone_crawler_spark.operators.seen import SeenSet, key_bucket
+    from siteone_crawler_spark.operators.seen import SeenSet
 
-    seen = SeenSet(spark, n_buckets=4, bits_per_bucket=1 << 14)
+    seen = SeenSet(spark, n_buckets=4)
     seen.bloom_min_keys = 1  # force the bloom path
     keys = spark.createDataFrame(
         [(f"{i:032x}",) for i in range(200)], "url_key string"
     )
     seen._keys = keys
-    seen.prefilter.add_keys(
-        keys.withColumn("bucket", key_bucket(F.col("url_key"), 4)).toPandas()
-    )
+    seen.absorb(keys)
 
     cands = spark.createDataFrame(
         [(f"{i:032x}",) for i in range(150, 300)], "url_key string"
@@ -49,23 +67,6 @@ def test_seen_filter_new_bloom_and_exact_paths(spark):
     seen.bloom_min_keys = 10**9
     got2 = {r["url_key"] for r in seen.filter_new(cands, n_seen=200).collect()}
     assert got2 == expected
-
-
-def test_distributed_bloom_build(spark):
-    from siteone_crawler_spark.operators.seen import (
-        BloomState,
-        build_bloom_blobs,
-        key_bucket,
-    )
-
-    keys = spark.createDataFrame(
-        [(f"{i:032x}",) for i in range(1000)], "url_key string"
-    ).withColumn("bucket", key_bucket(F.col("url_key"), 8))
-    st = BloomState(8, 1 << 14, 7)
-    for b, blob in build_bloom_blobs(keys, st.m, st.k):
-        st.merge_blob(b, blob)
-    pdf = keys.toPandas()
-    assert st.contains(pdf).all()
 
 
 def test_with_global_seq_big_path(spark):
@@ -93,30 +94,6 @@ def test_with_global_seq_big_path(spark):
     a = sorted(map(tuple, ranked.collect()))
     b = sorted(map(tuple, ranked2.collect()))
     assert a == b
-
-
-def test_bloom_builder_paths_identical(spark):
-    """The driver pandas build (used <250k keys) and the distributed
-    per-bucket build must produce byte-identical bitsets — the engine
-    switches between them on slice size, which must never change results."""
-    from siteone_crawler_spark.operators.seen import (
-        BloomState,
-        build_bloom_blobs,
-        key_bucket,
-    )
-
-    keys = spark.createDataFrame(
-        [(f"{i * 2654435761 % (1 << 128):032x}",) for i in range(2000)],
-        "url_key string",
-    ).withColumn("bucket", key_bucket(F.col("url_key"), 8))
-    a = BloomState(8, 1 << 14, 7)
-    a.add_keys(keys.toPandas())
-    b = BloomState(8, 1 << 14, 7)
-    for bk, blob in build_bloom_blobs(keys, b.m, b.k):
-        b.merge_blob(bk, blob)
-    assert set(a.bits) == set(b.bits)
-    for bk in a.bits:
-        assert a.bits[bk].tobytes() == b.bits[bk].tobytes()
 
 
 def test_with_global_seq_big_path_pure_catalyst(spark):
