@@ -575,86 +575,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["bpe_pair_stats"] = q_bpe_pair_stats
 
-    def q_lm_xent(spark, sf_dir):
-        """CCNet-style LM quality filter (operators/lm.lm_cross_entropy):
-        smoothed unigram cross-entropy vs an English reference corpus —
-        vocabulary-sized broadcast logprob join + one per-doc aggregate."""
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.lm import lm_cross_entropy
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents")
-        return lm_cross_entropy(docs, docs.filter(F.col("lang") == "en"))
-
-    q["lm_xent"] = q_lm_xent
-
-    def q_tfidf_topk(spark, sf_dir):
-        """Top-5 tf-idf terms per doc (operators/tfidf.tfidf_topk): one
-        corpus (doc,term) aggregate, broadcast idf join, WindowGroupLimit
-        per-doc top-k; rank on the rounded score for engine-portable order."""
-        from siteone_crawler_spark.operators.tfidf import tfidf_topk
-
-        _register(spark, sf_dir)
-        return tfidf_topk(spark.table("documents"), k=5)
-
-    q["tfidf_topk"] = q_tfidf_topk
-
-    def q_corpus_datacard(spark, sf_dir):
-        """Per-source data card (operators/datacard.corpus_datacard):
-        one corpus scan, global fingerprint dup aggregate broadcast back,
-        one per-source fold + WindowGroupLimit language mode."""
-        from siteone_crawler_spark.operators.datacard import corpus_datacard
-
-        _register(spark, sf_dir)
-        return corpus_datacard(spark.table("documents"))
-
-    q["corpus_datacard"] = q_corpus_datacard
-
-    def q_asof_purchase_click(spark, sf_dir):
-        """As-of join (operators/asof.asof_join): each purchase gets the
-        most recent prior-or-equal click by the same user — union-window
-        rewrite, ONE shuffle (the window exchange), no join node."""
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.asof import asof_join
-
-        _register(spark, sf_dir)
-        ev = spark.table("events")
-        left = ev.filter(F.col("event_type") == "purchase").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        right = ev.filter(F.col("event_type") == "click").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        return asof_join(left, right)
-
-    q["asof_purchase_click"] = q_asof_purchase_click
-
-    def q_range_join_error_window(spark, sf_dir):
-        """Bucketized range join (operators/rangejoin.range_join):
-        purchases inside the 1-hour window after any error by the same
-        user — interval explode + (key,bucket) equi-join + exact re-check,
-        never a nested-loop join."""
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.rangejoin import range_join
-
-        _register(spark, sf_dir)
-        ev = spark.table("events")
-        points = ev.filter(F.col("event_type") == "purchase").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        intervals = ev.filter(F.col("event_type") == "error").select(
-            F.col("event_id").alias("error_id"),
-            "user_id",
-            F.col("ts").alias("start"),
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end"),
-        )
-        return range_join(points, intervals)
-
-    q["range_join_error_window"] = q_range_join_error_window
-
     def q_mean_pool(spark, sf_dir):
         """Element-wise mean pooling of embeddings per group
         (operators/pooling.mean_pool): posexplode -> per-(group,dim) avg
@@ -739,52 +659,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["pii_redact"] = q_pii_redact
-
-    def q_decontamination(spark, sf_dir):
-        # eval set = every 97th doc (a benchmark is tiny next to the
-        # training corpus); 5-gram overlap against everything else
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.decontam import ngram_contamination
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents")
-        return ngram_contamination(
-            docs.filter(F.col("doc_id") % 97 != 0),
-            docs.filter(F.col("doc_id") % 97 == 0),
-            n=5,
-        )
-
-    q["decontamination"] = q_decontamination
-
-    def q_line_boilerplate(spark, sf_dir):
-        # the corpus has no newlines, so both sides synthesize the same
-        # 3-line docs: unique body + a footer planted in EVERY doc + a
-        # "subscribe" line in every 3rd doc — the two planted lines exceed
-        # max_df and must vanish, order-exact rebuild md5-checked
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.linededup import (
-            strip_boilerplate_lines,
-        )
-
-        _register(spark, sf_dir)
-        aug = spark.table("documents").select(
-            "doc_id",
-            F.concat_ws(
-                "\n",
-                F.col("text"),
-                F.lit("boilerplate footer"),
-                F.when(
-                    F.col("doc_id") % 3 == 0,
-                    F.lit("subscribe to our newsletter"),
-                ).otherwise(F.concat(F.lit("line "), F.col("doc_id").cast("string"))),
-            ).alias("text"),
-        )
-        out = strip_boilerplate_lines(aug, max_df=10)
-        return out.select("doc_id", F.md5("text").alias("stripped_md5"))
-
-    q["line_boilerplate"] = q_line_boilerplate
 
     def q_temperature_sample(spark, sf_dir):
         from siteone_crawler_spark.operators.sampling import temperature_sample
@@ -881,36 +755,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dedup_clusters(docs, pairs)
 
     q["dedup_clusters"] = q_dedup_clusters
-
-    def q_pagerank(spark, sf_dir):
-        """Link-authority prior (operators/graph.py): 3 power steps over a
-        deterministic synthetic link graph both engines derive from
-        documents (doc d -> (d*d+1)%120 and (13d+3)%120 (the quadratic map is non-bijective, so in-degrees skew), self-loops
-        dropped). The oracle unrolls the same iterations as chained CTEs;
-        ranks rounded to 6 dp on both sides."""
-        from siteone_crawler_spark.operators.graph import pagerank
-
-        _register(spark, sf_dir)
-        d = spark.table("documents").filter(F.col("doc_id") < 120).select("doc_id")
-        e = (
-            d.select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") * F.col("doc_id") + 1) % 120).alias("dst"),
-            )
-            .union(
-                d.select(
-                    F.col("doc_id").alias("src"),
-                    ((F.col("doc_id") * 13 + 3) % 120).alias("dst"),
-                )
-            )
-            .filter(F.col("src") != F.col("dst"))
-        )
-        pr = pagerank(e, iterations=3)
-        return pr.select(
-            F.col("node").alias("doc_id"), F.round("rank", 6).alias("rank")
-        )
-
-    q["pagerank"] = q_pagerank
 
     def q_gopher_quality(spark, sf_dir):
         """Gopher §A1.1 quality rules (functions/text.gopher_flags): the
@@ -1632,8 +1476,7 @@ _DIALECT_TWINS = (
 
 # Redundant presentation variants demoted to make room in the 50-row driver
 # gate for the first-class training operators (hash_sample,
-# stratified_sample, repetition_ratio, pii_scan, pii_redact,
-# decontamination): each demoted row is a projection or source-table twin
+# stratified_sample, repetition_ratio, pii_scan, pii_redact): each demoted row is a projection or source-table twin
 # of a still-gated row (count_by_status ⊂ basic_stats; visited_top_slowest
 # = top_slowest over the visited subset; caching_stats_domain_ct = the two
 # gated caching_stats_* variants crossed; visited_content_type_stats /
@@ -1648,16 +1491,9 @@ _PYTEST_ONLY = (
     "visited_content_type_stats",
     "visited_source_domain_stats",
     "visited_basic_stats",
-    # two more variant rows displaced (r5) so the strongest new operators —
-    # near-dup cluster closure and PageRank — are certified by the hard
-    # driver gate instead: each displaced row is a per-dimension twin of a
-    # still-gated aggregation (caching_stats_domain / dns_stats)
-    "caching_stats_content_type",
-    "dns_stats_resolve",
-    # post-width training ops (gate already holds 8 first-class training
-    # rows incl. dedup_clusters/pagerank); full DuckDB oracles run in the
+    # post-width training ops (the gate already holds the first-class
+    # training rows incl. dedup_clusters); full DuckDB oracles run in the
     # pytest gate
-    "line_boilerplate",
     "temperature_sample",
     "pack_sequences",
     "classifier_score",
@@ -1669,11 +1505,6 @@ _PYTEST_ONLY = (
     "semdedup",
     "dsir_weights",
     "bpe_pair_stats",
-    "lm_xent",
-    "tfidf_topk",
-    "corpus_datacard",
-    "asof_purchase_click",
-    "range_join_error_window",
     "mean_pool",
     "gumbel_topk",
 )
@@ -1948,112 +1779,6 @@ def _all_oracle_sql() -> dict[str, str]:
         SELECT lhs, rhs, CAST(sum(wc) AS bigint) AS pair_count
         FROM p GROUP BY lhs, rhs HAVING sum(wc) >= 2"""
 
-    # CCNet-style unigram LM cross-entropy (operators/lm.py, alpha=1,
-    # ref = lang='en'): p(tok) = (c+1)/(N + V + 1), UNK shares the +1 slot;
-    # xent = -avg(logp), rounded 6 (accumulation order differs per engine)
-    o["lm_xent"] = f"""
-        WITH dt AS (SELECT doc_id, lang, unnest({_TOKS_DUCK}) AS tok
-                    FROM documents),
-        c AS (SELECT tok, count(*) AS c FROM dt WHERE lang = 'en'
-              GROUP BY tok),
-        tot AS (SELECT sum(c) AS n, count(*) AS v FROM c),
-        lp AS (SELECT tok, ln((c + 1.0) / (tot.n + tot.v + 1.0)) AS logp
-               FROM c, tot),
-        unk AS (SELECT ln(1.0 / (n + v + 1.0)) AS u FROM tot),
-        j AS (SELECT dt.doc_id, coalesce(lp.logp, unk.u) AS l
-              FROM dt LEFT JOIN lp USING (tok), unk),
-        a AS (SELECT doc_id, count(*) AS nt, round(-avg(l), 6) AS xent
-              FROM j GROUP BY doc_id)
-        SELECT d.doc_id, CAST(coalesce(a.nt, 0) AS int) AS n_tokens,
-          coalesce(a.xent, 0.0) AS xent
-        FROM documents d LEFT JOIN a USING (doc_id)"""
-
-    # tf-idf top-5 terms per doc (operators/tfidf.py): smoothed idf
-    # ln((N+1)/(df+1))+1; rank on the ROUNDED score (term asc tiebreak) so
-    # the order survives libm ulp differences between engines
-    o["tfidf_topk"] = f"""
-        WITH dt AS (SELECT doc_id, unnest({_TOKS_DUCK}) AS term
-                    FROM documents),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM dt
-               GROUP BY doc_id, term),
-        df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        n AS (SELECT count(*) AS n FROM documents),
-        s AS (SELECT tf.doc_id, tf.term,
-                round(tf.tf * (ln((n.n + 1.0) / (df.df + 1.0)) + 1.0), 6)
-                  AS score
-              FROM tf JOIN df USING (term), n),
-        r AS (SELECT doc_id, term, score,
-                row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, term) AS rn
-              FROM s)
-        SELECT doc_id, term, score, CAST(rn AS int) AS rank
-        FROM r WHERE rn <= 5"""
-
-    # per-source corpus data card (operators/datacard.py): global md5
-    # fingerprint dup flag, per-source fold, language mode with
-    # (count desc, lang asc) tie-break
-    o["corpus_datacard"] = f"""
-        WITH base AS (SELECT source, lang, len({_TOKS_DUCK}) AS nt,
-                        md5(text) AS fp
-                      FROM documents),
-        dup AS (SELECT fp FROM base GROUP BY fp HAVING count(*) > 1),
-        st AS (SELECT b.source, CAST(count(*) AS int) AS n_docs,
-                 CAST(sum(b.nt) AS bigint) AS total_tokens,
-                 CAST(sum(CASE WHEN d.fp IS NULL THEN 0 ELSE 1 END) AS int)
-                   AS n_dup_docs
-               FROM base b LEFT JOIN dup d USING (fp) GROUP BY b.source),
-        lc AS (SELECT source, lang, count(*) AS c FROM base
-               GROUP BY source, lang),
-        tl AS (SELECT source, lang AS top_lang FROM (
-                 SELECT source, lang,
-                   row_number() OVER (PARTITION BY source
-                                      ORDER BY c DESC, lang) AS rn
-                 FROM lc) t WHERE rn = 1)
-        SELECT st.source, st.n_docs, st.total_tokens, st.n_dup_docs,
-          tl.top_lang
-        FROM st JOIN tl USING (source)"""
-
-    # as-of join (operators/asof.py): purchases matched to the most recent
-    # prior-or-equal click per user; the SAME union-window rewrite the
-    # engine runs (not DuckDB's ASOF JOIN — its equal-ts tie rule among
-    # right rows is unspecified, ours is max event_id)
-    o["asof_purchase_click"] = """
-        WITH l AS (SELECT event_id, ts, user_id, value FROM events
-                   WHERE event_type = 'purchase'),
-        r AS (SELECT event_id, ts, user_id, value FROM events
-              WHERE event_type = 'click'),
-        u AS (
-          SELECT user_id, ts, 1 AS side, event_id AS seq, event_id, value,
-            NULL::BIGINT AS r_id, NULL::DOUBLE AS r_value
-          FROM l
-          UNION ALL
-          SELECT user_id, ts, 0, event_id, NULL, NULL, event_id, value
-          FROM r
-        ),
-        w AS (
-          SELECT *,
-            last_value(r_id IGNORE NULLS) OVER win AS m_id,
-            last_value(r_value IGNORE NULLS) OVER win AS m_value
-          FROM u
-          WINDOW win AS (PARTITION BY user_id ORDER BY ts, side, seq
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        )
-        SELECT event_id, ts, user_id, value,
-          m_id AS matched_event_id, m_value AS matched_value
-        FROM w WHERE side = 1"""
-
-    # bucketized range join (operators/rangejoin.py): purchases in the
-    # [error_ts, error_ts + 1h) window of the same user; the oracle is the
-    # plain inequality join the bucketization must exactly reproduce
-    o["range_join_error_window"] = """
-        SELECT p.event_id, p.ts, p.user_id, p.value,
-          e.event_id AS error_id, e.ts AS start,
-          e.ts + INTERVAL 1 HOUR AS "end"
-        FROM events p JOIN events e
-          ON p.user_id = e.user_id
-         AND e.ts <= p.ts AND p.ts < e.ts + INTERVAL 1 HOUR
-        WHERE p.event_type = 'purchase' AND e.event_type = 'error'"""
-
     # mean pooling (operators/pooling.py): per-dimension avg per group
     # (vec_id % 50), list rebuilt in dimension order, avg rounded 6
     o["mean_pool"] = """
@@ -2120,42 +1845,6 @@ def _all_oracle_sql() -> dict[str, str]:
     o["pii_redact"] = (
         _pii_aug + f"SELECT doc_id, md5({_red}) AS redacted_md5 FROM aug"
     )
-
-    _sh5 = _shingles_sql("duck", 5)
-    o["decontamination"] = f"""
-        WITH ev AS (
-          SELECT DISTINCT shingle FROM (
-            SELECT unnest({_sh5}) AS shingle FROM documents WHERE doc_id % 97 = 0)
-        ), tr AS (
-          SELECT DISTINCT doc_id, shingle FROM (
-            SELECT doc_id, unnest({_sh5}) AS shingle
-            FROM documents WHERE doc_id % 97 <> 0)
-        )
-        SELECT doc_id, count(*) AS n_overlap
-        FROM tr JOIN ev USING (shingle)
-        GROUP BY doc_id"""
-
-    o["line_boilerplate"] = """
-        WITH aug AS (
-          SELECT doc_id,
-            text || chr(10) || 'boilerplate footer' || chr(10) ||
-            CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter'
-                 ELSE 'line ' || CAST(doc_id AS VARCHAR) END AS t
-          FROM documents
-        ), ls AS (
-          SELECT doc_id, string_split(t, chr(10)) AS arr FROM aug
-        ), ex AS (
-          SELECT doc_id, unnest(arr) AS line,
-                 generate_subscripts(arr, 1) AS pos
-          FROM ls
-        ), bad AS (
-          SELECT line FROM ex WHERE trim(line) <> ''
-          GROUP BY line HAVING count(DISTINCT doc_id) > 10
-        )
-        SELECT doc_id,
-               md5(string_agg(line, chr(10) ORDER BY pos)) AS stripped_md5
-        FROM ex WHERE line NOT IN (SELECT line FROM bad)
-        GROUP BY doc_id"""
 
     # temperature mixing: same double arithmetic on both engines (pow/
     # floor/hex are IEEE-exact; a last-ulp divergence could only flip a
@@ -2279,37 +1968,6 @@ def _all_oracle_sql() -> dict[str, str]:
         SELECT node AS doc_id, min(lbl) AS component,
                (min(lbl) = node) AS is_keeper
         FROM reach GROUP BY node"""
-
-    # pagerank: the same 3 power steps as the Spark operator, unrolled as
-    # chained CTEs (recursive CTEs cannot aggregate over the recursive
-    # reference, so fixed iterations unroll instead)
-    _pr = """
-        WITH e0 AS (
-          SELECT doc_id AS src, (doc_id*doc_id+1) % 120 AS dst
-          FROM documents WHERE doc_id < 120
-          UNION
-          SELECT doc_id AS src, (doc_id*13+3) % 120 AS dst
-          FROM documents WHERE doc_id < 120
-        ), e AS (SELECT src, dst FROM e0 WHERE src <> dst),
-        nodes AS (
-          SELECT DISTINCT node FROM (
-            SELECT src AS node FROM e UNION SELECT dst AS node FROM e)
-        ), nn AS (SELECT count(*) AS c FROM nodes),
-        deg AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-        r0 AS (SELECT node, 1.0/(SELECT c FROM nn) AS rank FROM nodes)"""
-    for _i in range(3):
-        _pr += f""",
-        d{_i} AS (SELECT coalesce(sum(rank), 0) AS m FROM r{_i}
-                  WHERE node NOT IN (SELECT src FROM deg)),
-        c{_i} AS (SELECT e.dst AS node, sum(r{_i}.rank / deg.od) AS ir
-                  FROM e JOIN r{_i} ON e.src = r{_i}.node
-                  JOIN deg ON e.src = deg.src GROUP BY e.dst),
-        r{_i + 1} AS (SELECT nodes.node,
-                  0.15/(SELECT c FROM nn)
-                  + 0.85*(coalesce(c{_i}.ir, 0)
-                          + (SELECT m FROM d{_i})/(SELECT c FROM nn)) AS rank
-                  FROM nodes LEFT JOIN c{_i} ON nodes.node = c{_i}.node)"""
-    o["pagerank"] = _pr + "\n        SELECT node AS doc_id, round(rank, 6) AS rank FROM r3"
 
     o["gopher_quality"] = f"""
         WITH aug AS (

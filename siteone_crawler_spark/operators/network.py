@@ -19,7 +19,7 @@ hosts are ~3 orders of magnitude fewer than URLs, so `probe_targets`
 dedups hosts distributed and a real deployment maps a socket prober over
 the result (mapInPandas, one row per host:port). This sandbox has no
 network, so `synth_probes` generates deterministic probe rows with the
-same schema (the multimodal-codec pattern: plumbing real, probe faked).
+same schema (plumbing real, probe faked).
 All analysis below the probe is native DataFrame ops.
 """
 

@@ -1,5 +1,5 @@
 """Plan inspection helpers — used by tests to assert Catalyst did its job
-(pushdown reached the scan, joins broadcast, codegen spans exist)."""
+(pushdown reached the scan, joins broadcast, no Python in the plan)."""
 
 from __future__ import annotations
 
@@ -12,16 +12,5 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def scan_pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters section(s) of the physical plan."""
-    plan = explain_str(df)
-    return "\n".join(line.strip() for line in plan.splitlines() if "PushedFilters" in line)
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df, "simple")
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = explain_str(df, "simple")
-    return plan.count("WholeStageCodegen")

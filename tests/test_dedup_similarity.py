@@ -316,51 +316,6 @@ def test_word_shingles(spark):
     assert got[2]["s"] == []
 
 
-def test_multimodal_plumbing(spark):
-    from siteone_crawler_spark.operators.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        media_repartition,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, n=30)
-    feats = extract_features(media, fake=True).collect()
-    assert len(feats) == 30
-    assert all(len(r["feat"]) == 8 and r["ok"] for r in feats)
-    # deterministic
-    feats2 = extract_features(media, fake=True).collect()
-    assert sorted(r["media_id"] for r in feats) == sorted(r["media_id"] for r in feats2)
-
-    # real decode path is honestly stubbed
-    import pytest as _pt
-    with _pt.raises(Exception, match="NotImplementedError|codecs"):
-        extract_features(media, fake=False).collect()
-
-    rep = media_repartition(media, target_bytes=1024)
-    assert rep.count() == 30
-
-    plan = frame_sample_plan(media, every_ms=500)
-    assert plan.count() > 0
-    assert plan.columns == ["media_id", "frame_ts"]
-
-    from siteone_crawler_spark.operators.multimodal import resize_images
-
-    rz = resize_images(media, width=32, height=16, fake=True).collect()
-    assert len(rz) == 30
-    imgs = [r for r in rz if r["kind"] == "image"]
-    other = [r for r in rz if r["kind"] != "image"]
-    assert imgs and all(r["ok"] and len(r["payload"]) == 32 * 16 // 64 for r in imgs)
-    assert all((not r["ok"]) and r["payload"] is None for r in other)
-    # deterministic stand-in payloads
-    rz2 = resize_images(media, width=32, height=16, fake=True).collect()
-    assert sorted((r["media_id"], bytes(r["payload"] or b"")) for r in rz) == sorted(
-        (r["media_id"], bytes(r["payload"] or b"")) for r in rz2
-    )
-    with _pt.raises(Exception, match="NotImplementedError|codecs"):
-        resize_images(media, fake=False).collect()
-
-
 def test_subword_token_count(spark):
     from siteone_crawler_spark.functions.text import subword_token_count
 
