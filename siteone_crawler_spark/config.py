@@ -6,7 +6,7 @@ politeness superset (per-host budgets). One instance is broadcast per run.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 def is_pcre_pattern(s: str) -> bool:
@@ -57,24 +57,6 @@ class CrawlConfig:
     ignore_regex: tuple[str, ...] = ()
     remove_query_params: bool = False
     keep_query_params: tuple[str, ...] = ()
-    # native pre-filter of definitely-invalid hrefs before the Arrow
-    # exchange (urls.href_cheap_invalid_col — string ops only, an
-    # under-approximation that may drop ONLY kernel-invalid rows).
-    # False = off, True = always on, "auto" = probe the cheaply-droppable
-    # fraction of the first wave's candidates (one bounded aggregate) and
-    # enable only above the threshold. Measured A/B (local[8], 400k
-    # frontier): ~7% whole-wave win at 47% droppable hrefs (29.5-30.7s on
-    # vs 31.8-33.5s off); the exact regex-chain replica (href_valid_col)
-    # LOST 2.6x on the same corpus at ~58us/row and is kept only as the
-    # reference predicate. Semantics never change either way: anything the
-    # cheap predicate misses, the Python kernel still rejects
-    # (implication property-pinned, tests/test_urls).
-    native_href_prefilter: bool | str = False
-    # auto-mode knobs: enable when >= threshold of probed hrefs are
-    # cheaply droppable. The predicate costs ~1-2us/row, so the threshold
-    # is about avoiding pointless plan churn, not cost.
-    href_prefilter_threshold: float = 0.25
-    href_prefilter_probe_rows: int = 50000
     crawl_assets: bool = True  # False ~ --crawl-only-html-files
     # P14 per-asset-class toggles (--disable-images/-javascript/-styles/
     # -fonts/-files; html_processor.rs:744-807). All-on by default; span
@@ -117,20 +99,6 @@ class CrawlConfig:
             if m:
                 out[f"{m.group(1)}:{m.group(2)}"] = m.group(3)
         return out
-
-    def extract_flags(self):
-        """Bridge to the extraction-layer toggles (operators/extract.py)."""
-        from .operators.extract import ExtractFlags
-
-        return ExtractFlags(
-            single_page=self.single_page,
-            single_foreign_page=self.single_foreign_page,
-            images_enabled=self.images_enabled,
-            fonts_enabled=self.fonts_enabled,
-            files_enabled=self.files_enabled,
-            scripts_enabled=self.scripts_enabled,
-            styles_enabled=self.styles_enabled,
-        )
 
     def allowed_domain_regexes(self) -> list[re.Pattern]:
         """`*.example.com` wildcard allowlist -> anchored regexes

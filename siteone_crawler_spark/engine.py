@@ -48,7 +48,6 @@ Scale notes (local[32] here, 1000 executors in spirit):
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -64,11 +63,10 @@ from .config import (
     SPAN_KIND_TO_SOURCE,
     CrawlConfig,
 )
-from .functions.robots import compile_rules_map, is_allowed
+from .functions.robots import compile_rules_map
 from .functions.urls import (
     HTMLISH_EXTENSIONS,
     canonicalize,
-    href_cheap_invalid_col,
     make_resolve_udf,
 )
 from .operators.ordering import with_global_seq
@@ -88,7 +86,6 @@ SKIPPED_SCHEMA = (
     "url string, url_key string, reason int, source_uq_id string, source_attr int, wave int,"
     " parent_seq long, offset int"
 )
-EVENTS_SCHEMA = "basename string, seq long"
 BN_STATE_SCHEMA = "basename string, evt_seqs array<bigint>, n_events long"
 METRICS_SCHEMA = "wave int, stage string, rows long"
 LINEAGE_SCHEMA = "wave int, table string, file string, n_rows long, n_bytes long"
@@ -183,9 +180,6 @@ class CrawlEngine:
         # caches max(n_events) so no-trippable waves skip all breaker joins.
         self._bn_state: DataFrame | None = None
         self._bn_state_max = 0
-        # "auto" href-prefilter decision, resolved once on the first wave's
-        # candidates and held for the crawl (None = not yet probed)
-        self._href_prefilter_auto: bool | None = None
 
     # ------------------------------------------------------------------ run
     def run(
@@ -256,7 +250,9 @@ class CrawlEngine:
             "base string, href string, parent_seq long, offset int, kind string,"
             " source_attr int, source_uq_id string",
         )
-        accepted, skipped = self._candidate_pipeline(cand, wave=0, events_agg=None)
+        accepted, skipped = self._split_candidates(
+            self._resolve_candidates(cand), wave=0, events_agg=None
+        )
         self.store.write_table("skipped", 0, skipped)
         self._finalize_frontier(accepted, wave=0)
         for h in self._wave_caches:
@@ -363,23 +359,19 @@ class CrawlEngine:
         self, wave: int, pending: DataFrame, docs: DataFrame, meta: DataFrame,
         n_pending: int = 0,
     ) -> None:
-        import os as _os
         import time as _time
 
-        _dbg = _os.environ.get("SPARK_FRONTIER_DEBUG") == "1"
         _t = _time.time()
 
         def _mark(stage: str) -> None:
-            # per-phase wall time always lands in the metrics table as a
+            # per-phase wall time lands in the metrics table as a
             # `time_us:<phase>` row (rows = microseconds) — the lineage data
-            # behind the content-processors-stats report table; debug mode
-            # additionally prints. Phases after the metrics write itself
-            # (metrics+lineage, commit) can't be recorded, by construction.
+            # behind the content-processors-stats report table. Phases after
+            # the metrics write itself (metrics+lineage, commit) can't be
+            # recorded, by construction.
             nonlocal _t
             now = _time.time()
             metrics.append((wave, f"time_us:{stage}", int((now - _t) * 1e6)))
-            if _dbg:
-                print(f"[wave {wave}] {stage}: {now - _t:.1f}s", flush=True)
             _t = now
 
         cfg = self.config
@@ -591,45 +583,6 @@ class CrawlEngine:
         self._wave_caches.clear()
 
     # ------------------------------------------------- candidate pipeline
-    def _candidate_pipeline(self, cand: DataFrame, wave: int, events_agg: DataFrame | None):
-        """P1-P15 (SURVEY §2.2): returns (accepted, skipped), undeduped."""
-        c = self._resolve_candidates(cand)
-        return self._split_candidates(c, wave, events_agg)
-
-    def _href_prefilter_enabled(self, cand: DataFrame) -> bool:
-        """Resolve CrawlConfig.native_href_prefilter (False | True | "auto").
-
-        Auto mode measures instead of guessing: sample up to
-        href_prefilter_probe_rows hrefs from the first wave's candidates
-        (a bounded limit+aggregate — CollectLimit scans partitions
-        incrementally, so on BFS ramp-up waves this touches only the tiny
-        seed fan-out) and enable the native pre-filter for the WHOLE crawl
-        iff the invalid fraction exceeds href_prefilter_threshold. One
-        probe per crawl: the decision is corpus-shaped, not wave-shaped,
-        and holding it fixed keeps every wave's physical plan identical.
-        Toggling is always parity-safe — the predicate is a pure
-        short-circuit of the Python kernel (property-pinned).
-        """
-        mode = self.config.native_href_prefilter
-        if mode != "auto":
-            return bool(mode)
-        if self._href_prefilter_auto is None:
-            row = (
-                cand.select("href")
-                .limit(self.config.href_prefilter_probe_rows)
-                .agg(
-                    F.avg(
-                        href_cheap_invalid_col(F.col("href")).cast("double")
-                    ).alias("bad")
-                )
-                .first()
-            )
-            frac = row["bad"] or 0.0
-            self._href_prefilter_auto = bool(
-                frac >= self.config.href_prefilter_threshold
-            )
-        return self._href_prefilter_auto
-
     def _resolve_candidates(self, cand: DataFrame) -> DataFrame:
         """Resolve + event-independent predicate flags on ONE cached
         DataFrame, so the expensive upstream (fetch joins + resolve/robots
@@ -645,28 +598,6 @@ class CrawlEngine:
         # kernel — spread it across the executors first. The shuffle moves
         # only (base, href) strings and buys full-parallel UDF execution.
         c = cand.repartition(self.spark.sparkContext.defaultParallelism * 2)
-        if self._href_prefilter_enabled(cand):
-            # Real-web corpora run 5-50% mailto:/javascript:/fragment/
-            # template hrefs: drop DEFINITELY-invalid candidates natively so
-            # they never pay the Arrow exchange or the Python kernel. The
-            # predicate is the cheap string-ops under-approximation
-            # (href_cheap_invalid_col): it may only drop rows the kernel
-            # would drop (implication property-pinned), and anything it
-            # misses the kernel still rejects — never a semantic fork.
-            # History: the first version used the exact regex-chain replica
-            # (href_valid_col) and LOST 2.4-2.8x in every regime — ~58us/row
-            # charged to every candidate vs the few-us/row kernel rejection
-            # it saved. The OR-term below is always false
-            # (monotonically_increasing_id is non-negative) but
-            # NONDETERMINISTIC, which pins the filter above the exchange —
-            # PushDownPredicates otherwise moves it through Repartition onto
-            # the AQE-coalesced ~1-partition join output and it runs serial.
-            # "auto" probes the corpus with this same predicate instead of
-            # guessing (see _href_prefilter_enabled).
-            c = c.filter(
-                ~href_cheap_invalid_col(F.col("href"))
-                | (F.monotonically_increasing_id() < F.lit(0))
-            )
         c = c.withColumn("r", self._resolve(F.col("base"), F.col("href")))
         c = c.filter(F.col("r.valid"))  # P1/P2/P6 — invalid dropped silently
         # url_key/uq_id natively: Spark md5(str) is bit-identical to the

@@ -97,21 +97,6 @@ def cache_lifetime(headers: dict | None) -> int | None:
     return int(digits) if digits else None
 
 
-def cache_type_label(flags: int) -> str:
-    """visited_url.rs:256-279: 'Cache-Control'/'Expires' + 'ETag' +
-    'Last-Modified', else 'No cache headers'."""
-    labels = []
-    if flags & HAS_CACHE_CONTROL:
-        labels.append("Cache-Control")
-    elif flags & HAS_EXPIRES:
-        labels.append("Expires")
-    if flags & HAS_ETAG:
-        labels.append("ETag")
-    if flags & HAS_LAST_MODIFIED:
-        labels.append("Last-Modified")
-    return " + ".join(labels) if labels else "No cache headers"
-
-
 # --- native Catalyst expressions (no Python in the hot path) ----------------
 
 

@@ -57,13 +57,6 @@ class RobotsRules:
     # NORTH-RULE SUPERSET (see module docstring).
     crawl_delay: float | None = None
 
-    def to_rows(self, host: str) -> list[tuple[str, str, str]]:
-        """Flatten to (host, rule_type, pattern) rows for the broadcast table."""
-        rows = [(host, "disallow", p) for p in self.disallowed]
-        rows += [(host, "allow", p) for p in self.allowed]
-        rows += [(host, "sitemap", p) for p in self.sitemaps]
-        return rows
-
 
 _UA_RE = re.compile(r"(?i)^User-agent:\s*(.*)")
 _DISALLOW_RE = re.compile(r"(?i)^Disallow:\s*(.*)")

@@ -24,8 +24,9 @@ Everything is exposed two ways:
   2. Arrow-batched pandas UDFs built from the same kernels, so the Spark
      engine and the simulator share byte-identical semantics.
 
-The 64-bit partition/bloom key intentionally does NOT use a UDF: it is the
-native `F.xxhash64(url_key)` so partitioning stays JVM-side.
+The 64-bit partition/bloom key is not computed here: `operators/seen.key_bucket`
+derives it natively from `url_key` with xxhash64, so partitioning stays
+JVM-side.
 """
 
 from __future__ import annotations
@@ -44,16 +45,9 @@ from pyspark.sql import types as T
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:")
 _HTTPISH_RE = re.compile(r"^https?:", re.IGNORECASE)
 
-# extensions the reference treats as always-allowed static assets in robots
-# matching and as "static file" in suitability (parsed_url.rs:507-513)
-ASSET_EXTENSIONS = frozenset(
-    "js css png jpg jpeg gif webp avif ico svg woff woff2 ttf otf eot mp3 mp4 ogg "
-    "webm wav pdf zip gz txt xml json".split()
-)
 HTMLISH_EXTENSIONS = frozenset(["", "html", "htm", "php", "asp", "aspx", "jsp", "shtml"])
 
 DEFAULT_PORTS = {"http": 80, "https": 443}
-MAX_URL_LENGTH_DEFAULT = 2083
 
 
 def normalize_href(href: str) -> str:
@@ -83,80 +77,6 @@ def is_href_valid(href: str) -> bool:
     if m and not _HTTPISH_RE.match(href):
         return False
     return True
-
-
-def href_cheap_invalid_col(href_col):
-    """Cheap NATIVE under-approximation of href invalidity — the hot-path
-    pre-filter. String ops only (startswith/contains/trim/lower, no regex):
-    ~1-2us/row, vs ~58us/row measured for the exact-replica regex chain
-    (href_valid_col), which cost 2.6x the ENTIRE wave when used as the
-    filter even on a 47%-invalid corpus.
-
-    Contract (property-pinned, tests/test_urls.py): may return true ONLY
-    for hrefs the Python kernel would reject after normalize_href —
-    false means "let the kernel decide", never "valid". Each branch is
-    safe against normalization: edge whitespace/quote stripping and
-    &amp;/&#38; decoding can neither create nor remove a leading '#', a
-    '{'/'<' anywhere, or a leading junk scheme; F.trim('')-emptiness is a
-    subset of Python strip()-emptiness. Deliberately NOT covered (kernel
-    handles them): quoted/whitespace-wrapped junk, exotic schemes, '&#'
-    template residue ('&#38;' decodes to a legal '&')."""
-    s = F.coalesce(href_col, F.lit(""))
-    low = F.lower(s)
-    return (
-        (F.trim(s) == "")
-        | s.startswith("#")
-        | s.contains("{")
-        | s.contains("<")
-        | low.startswith("mailto:")
-        | low.startswith("javascript:")
-        | low.startswith("data:")
-        | low.startswith("tel:")
-    )
-
-
-def href_valid_col(href_col):
-    """Native (Catalyst) replica of `is_href_valid(normalize_href(href))` —
-    used by the engine to drop definitely-invalid candidates BEFORE the
-    repartition + Arrow exchange, so fragment-only links, mailto:/
-    javascript:/data: schemes and template garbage (often 5-15% of extracted
-    hrefs on real pages) never pay the shuffle or the Python kernel.
-
-    Exact-parity with the Python kernel is pinned by a property test over a
-    curated + fuzz corpus (tests/test_urls.py); rows passing this predicate
-    still run the full kernel, so this is a pure short-circuit, never a
-    semantic fork.
-    """
-    # normalize_href: strip -> strip quote runs -> strip -> entity decode
-    # (&amp;/&#38; only) -> drop \t\n\r.  Python str.strip() strips the full
-    # Unicode-whitespace set (incl. \x0b \x0c \x1c-\x1f \x85 \xa0 u1680
-    # u2000-u200a u2028 u2029 u202f u205f u3000), while F.trim strips only
-    # ' ' — so edge-stripping uses an explicit character class enumerating
-    # exactly the codepoints where Python's str.isspace() is True.
-    # normalize_href's ' '->'%20' step is deliberately skipped: neither side
-    # of that rewrite can flip any validity predicate (none of '', '#', '{',
-    # '<', '&#' nor the scheme regex distinguishes ' ' from '%20' — both
-    # break a scheme match at the same position and neither contains a
-    # rejected substring).
-    pyws = "\t\n\x0b\f\r\x1c-\x1f \x85\xa0  -     　"
-    strip_re = f"^[{pyws}]+|[{pyws}]+$"
-    s = F.regexp_replace(F.coalesce(href_col, F.lit("")), strip_re, "")
-    s = F.regexp_replace(s, r"^[\"']+|[\"']+$", "")
-    s = F.regexp_replace(s, strip_re, "")
-    s = F.replace(s, F.lit("&amp;"), F.lit("&"))
-    s = F.replace(s, F.lit("&#38;"), F.lit("&"))
-    s = F.regexp_replace(s, r"[\t\n\r]", "")
-    nonhttp_scheme = s.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:") & ~s.rlike(
-        r"^(?i)https?:"
-    )
-    return (
-        (s != "")
-        & ~s.startswith("#")
-        & ~s.contains("{")
-        & ~s.contains("<")
-        & ~s.contains("&#")
-        & ~nonhttp_scheme
-    )
 
 
 _ABS_HTTP_RE = re.compile(r"^https?://", re.IGNORECASE)
@@ -362,10 +282,6 @@ def resolve_candidate(
     )
 
 
-def md5_hex(s: str) -> str:
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-
 # --- Spark surface ----------------------------------------------------------
 
 CANON_STRUCT = T.StructType(
@@ -449,12 +365,3 @@ def make_resolve_udf(
     # node per reference.
     return resolve_udf.asNondeterministic()
 
-
-@F.pandas_udf(T.StringType())
-def md5_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: hashlib.md5(x.encode("utf-8")).hexdigest() if x is not None else None)
-
-
-def url_key64(col):
-    """64-bit partition/bloom key — native JVM-side, no Python."""
-    return F.xxhash64(col)

@@ -448,7 +448,6 @@ def generate_site_df(
     fanout: int = 8,
     zipf: bool = True,
     hot_targets: int = 1000,
-    invalid_spans: int = 0,
 ):
     """Spark-NATIVE bench-scale site generator: builds the docs + meta tables
     entirely with column expressions (no Python row loops), so 10^7-doc
@@ -523,24 +522,6 @@ def generate_site_df(
             F.lit("").alias("media_ref"), F.lit(fanout + 2).alias("offset"),
         )
     )
-    # dirty-corpus mode: invalid_spans extra always-invalid hrefs per doc
-    # (rotating mailto:/javascript:/fragment/template shapes) — models
-    # real-web pages where 30-50% of extracted hrefs are unrequestable,
-    # the regime the native href pre-filter ("auto" mode) exists for
-    for i in range(invalid_spans):
-        junk = (
-            F.when(F.pmod(F.col("did") + i, F.lit(4)) == 0, F.lit("mailto:x@bench.test"))
-            .when(F.pmod(F.col("did") + i, F.lit(4)) == 1, F.lit("javascript:void(0)"))
-            .when(F.pmod(F.col("did") + i, F.lit(4)) == 2, F.lit("#top"))
-            .otherwise(F.lit("{{ template_var }}"))
-        )
-        span_structs.append(
-            F.struct(
-                F.lit("a_href").alias("kind"), junk.alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(fanout + 3 + i).alias("offset"),
-            )
-        )
 
     docs = ids.select(url.alias("doc_id"), F.array(*span_structs).alias("spans"))
     meta = docs.select(

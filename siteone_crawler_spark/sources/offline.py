@@ -27,12 +27,6 @@ import pandas as pd
 
 from ..functions.urls import is_href_valid
 
-STATIC_FILES_EXTENSIONS = (
-    "jpg|jpeg|png|gif|webp|svg|ico|js|css|txt|woff2|woff|ttf|eot|mp4|webm|ogg|mp3|wav|flac|pdf|doc"
-    "|docx|xls|xlsx|ppt|pptx|zip|rar|gz|bz2|7z|tar|xml|json|action|asp|aspx|cfm|cfml|cgi|do|gsp|jsp"
-    "|jspx|lasso|phtml|php|php3|php4|php5|php7|php8|php9|pl|py|rb|rbw|rhtml|shtml|srv|vm|vmdk"
-)
-
 RE_HTML_EXTENSIONS = re.compile(
     r"(?i)\.(htm|html|shtml|php|phtml|ashx|xhtml|asp|aspx|jsp|jspx|do|cfm|cgi|pl|rb|erb|gsp)$"
 )

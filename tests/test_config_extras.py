@@ -179,37 +179,3 @@ def test_resolve_overrides_probes(spark):
     assert got["c.test"][2] == []
     # non-overridden host keeps synthesized resolution
     assert got["b.test"][0] and got["b.test"][0][0].startswith("192.0.2.")
-
-
-def test_href_prefilter_auto_probe(spark, tmp_path):
-    """native_href_prefilter="auto" measures the corpus instead of guessing:
-    a clean candidate stream keeps the native pre-filter OFF, a majority-
-    invalid stream turns it ON, and the decision is probed ONCE per crawl
-    (sticky — later waves reuse it so every wave's plan stays identical)."""
-    from siteone_crawler_spark.engine import CrawlEngine
-
-    cfg = CrawlConfig(native_href_prefilter="auto")
-    clean = spark.createDataFrame(
-        [(f"https://a.test/p/{i}",) for i in range(200)], "href string"
-    )
-    dirty = spark.createDataFrame(
-        [("mailto:x@a.test",)] * 120 + [(f"https://a.test/p/{i}",) for i in range(80)],
-        "href string",
-    )
-
-    e1 = CrawlEngine(spark, cfg, str(tmp_path / "clean"), n_buckets=8)
-    assert e1._href_prefilter_enabled(clean) is False
-    # sticky: a later dirty wave does NOT flip the crawl-level decision
-    assert e1._href_prefilter_enabled(dirty) is False
-
-    e2 = CrawlEngine(spark, cfg, str(tmp_path / "dirty"), n_buckets=8)
-    assert e2._href_prefilter_enabled(dirty) is True
-    assert e2._href_prefilter_enabled(clean) is True
-
-    # plain bools bypass the probe entirely
-    e3 = CrawlEngine(
-        spark, CrawlConfig(native_href_prefilter=True), str(tmp_path / "on"),
-        n_buckets=8,
-    )
-    assert e3._href_prefilter_enabled(clean) is True
-    assert e3._href_prefilter_auto is None  # no probe ran

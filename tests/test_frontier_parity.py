@@ -69,18 +69,6 @@ def assert_parity(sim, tables):
         # seed itself fails the include filter -> fully empty crawl; the
         # engine must return empty tables, not crash on file-less state dirs
         dict(allowed_domains=("*.example.test",), include_regex=(r"zz-matches-nothing",)),
-        # opt-in native href pre-filter: a plan change only — the fixture
-        # plants mailto:/javascript:/template hrefs, so the native drop path
-        # is genuinely exercised and must not change any table
-        dict(allowed_domains=("*.example.test",), native_href_prefilter=True),
-        # auto mode: whatever the probe decides, tables must be identical
-        # (threshold 0 forces the prefilter ON through the auto path)
-        dict(allowed_domains=("*.example.test",), native_href_prefilter="auto"),
-        dict(
-            allowed_domains=("*.example.test",),
-            native_href_prefilter="auto",
-            href_prefilter_threshold=0.0,
-        ),
     ],
 )
 def test_parity_configs(spark, tmp_path, cfg_kw):

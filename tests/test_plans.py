@@ -256,3 +256,40 @@ def test_split_assign_is_scan_side_projection(spark):
     plan = explain_str(split_assign(df, key="doc_id"), "simple")
     assert "Exchange" not in plan
     assert "Python" not in plan
+
+
+def test_wave_resolve_udf_runs_once(spark, tmp_path):
+    """The wave's resolve UDF is marked nondeterministic so Catalyst cannot
+    copy it into both the `r.valid` filter and the `r.*` projection (a
+    duplicated UDF ran the kernel twice per candidate). The cached
+    candidate plan must hold exactly one ArrowEvalPython node, fed by the
+    round-robin repartition that spreads candidates across executors."""
+    from siteone_crawler_spark.config import CrawlConfig
+    from siteone_crawler_spark.engine import CrawlEngine
+    from siteone_crawler_spark.functions.robots import compile_rules_map
+    from siteone_crawler_spark.functions.urls import canonicalize, make_resolve_udf
+
+    cfg = CrawlConfig()
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ckpt"), n_buckets=4)
+    first = canonicalize("https://h.test/")
+    eng.initial_host, eng.initial_scheme = first["host"], first["scheme"]
+    eng._resolve = make_resolve_udf(
+        eng.initial_host, eng.initial_scheme, cfg.remove_query_params, None,
+        robots_rules=compile_rules_map({}), with_key=False,
+    )
+    cand = spark.createDataFrame(
+        [("https://h.test/", h, 0, i, "a_href", 10, "s")
+         for i, h in enumerate(["/a", "mailto:x@h.test", "/b?q=1"])],
+        "base string, href string, parent_seq long, offset int, kind string,"
+        " source_attr int, source_uq_id string",
+    )
+    try:
+        lines = explain_str(eng._resolve_candidates(cand), "simple").splitlines()
+        udf = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+        assert len(udf) == 1, "\n".join(lines)
+        child = lines[udf[0] + 1]
+        assert "Exchange RoundRobinPartitioning" in child, "\n".join(lines)
+    finally:
+        for h in eng._wave_caches:
+            h.unpersist()
+        eng._wave_caches.clear()

@@ -203,97 +203,3 @@ def test_native_md5_key_matches_python_kernel(spark):
         assert r["kernel_key"] == ""  # kernel skipped the hash
         assert r["url_key"] == k["url_key"]
         assert r["uq_id"] == k["uq_id"]
-
-
-def test_href_valid_col_matches_python_kernel(spark):
-    """The opt-in native pre-UDF href filter (href_valid_col, enabled via
-    CrawlConfig.native_href_prefilter) must agree with
-    is_href_valid(normalize_href(h)) on every input — it short-circuits
-    the Arrow exchange, so any disagreement would silently change P1/P2."""
-    import random
-
-    from siteone_crawler_spark.functions.urls import (
-        href_valid_col, is_href_valid, normalize_href,
-    )
-    import pyspark.sql.functions as F
-
-    curated = [
-        None, "", "   ", "#", "#top", " '#x' ", "mailto:x@y", "MAILTO:x@y",
-        "javascript:void(0)", "tel:+420", "data:text/plain;base64,xx",
-        "about:blank", "https://a.test/x", "HTTP://A/B", "//host/p",
-        "../rel", "./x", "/abs", "?q=1", "x.html", "{{ template }}",
-        "<b>", "a&#160;b", "a&#38;b", "a&amp;b", "\"quoted\"", "'q'",
-        "\t#frag", " \"  ' mixed '\" ", "ht+tp:x", "a:b", "a1+.-x:y",
-        "x\ty", "x\ny", "\"\"", "''", "週https://a/b", ":nocolonstart",
-        "&#38;", "  &amp;  ", "foo#bar", "https://a/#b",
-        # Python str.strip() whitespace that F.trim would miss
-        "\xa0#x", "　mailto:a@b", "\x0c'#y'", "\x1c\x1dhttps://a",
-        " tel:1", "\x85 {t}", "\xa0", "  ", "x\xa0y",
-    ]
-    # deterministic fuzz corpus over the alphabet the kernels care about
-    fuzz = [
-        "".join(random.Random(42 + i).choices(
-            "abcDE#{}<>&;:/.?='\"\t\n\r\x0b\x1d\x85\xa0　  +-@%週",
-            k=(i % 24)))
-        for i in range(400)
-    ]
-    vals = curated + fuzz
-    df = spark.createDataFrame([(v,) for v in vals], "href string")
-    got = {
-        r["href"]: r["ok"]
-        for r in df.select("href", href_valid_col(F.col("href")).alias("ok")).collect()
-    }
-    for v in vals:
-        want = is_href_valid(normalize_href(v))
-        assert got[v] == want, (repr(v), got[v], want)
-
-
-def test_href_cheap_invalid_col_implies_kernel_invalid(spark):
-    """The hot-path prefilter (href_cheap_invalid_col) is an
-    UNDER-approximation: wherever it says 'definitely invalid', the Python
-    kernel must agree (implication, not equivalence) — it may never drop a
-    row the kernel would keep. The reverse direction is deliberately open:
-    quoted/whitespace-wrapped junk and exotic schemes fall through to the
-    kernel. Also pins that it DOES catch the dominant junk shapes."""
-    import random
-
-    from siteone_crawler_spark.functions.urls import (
-        href_cheap_invalid_col, is_href_valid, normalize_href,
-    )
-    import pyspark.sql.functions as F
-
-    curated = [
-        None, "", "   ", "#", "#top", " '#x' ", "mailto:x@y", "MAILTO:x@y",
-        "javascript:void(0)", "JavaScript:alert(1)", "tel:+420",
-        "data:text/plain;base64,xx", "about:blank", "https://a.test/x",
-        "HTTP://A/B", "//host/p", "../rel", "./x", "/abs", "?q=1", "x.html",
-        "{{ template }}", "{x}", "<b>", "a&#160;b", "a&#38;b", "a&amp;b",
-        "\"quoted\"", "'q'", "\t#frag", "ht+tp:x", "a:b", "x\ty", "x\ny",
-        "週https://a/b", "&#38;", "foo#bar", "https://a/#b", "\xa0#x",
-        "　mailto:a@b", " tel:1", "\xa0", "  ", "x\xa0y", "telephone.html",
-        "mailtools/x", "datasheet.pdf",
-    ]
-    fuzz = [
-        "".join(random.Random(1042 + i).choices(
-            "abcDE#{}<>&;:/.?='\"\t\n\r\x0b\x1d\x85\xa0　  +-@%週",
-            k=(i % 24)))
-        for i in range(400)
-    ]
-    vals = curated + fuzz
-    df = spark.createDataFrame([(v,) for v in vals], "href string")
-    got = {
-        r["href"]: r["bad"]
-        for r in df.select(
-            "href", href_cheap_invalid_col(F.col("href")).alias("bad")
-        ).collect()
-    }
-    for v in vals:
-        if got[v]:  # cheap says definitely-invalid -> kernel must agree
-            assert not is_href_valid(normalize_href(v)), repr(v)
-    # catches the dominant junk shapes (what makes it worth running)
-    for junk in ("#top", "mailto:x@y", "MAILTO:x@y", "javascript:void(0)",
-                 "{{ template }}", "<b>", "", "   ", None, "tel:+420"):
-        assert got[junk], repr(junk)
-    # prefix-lookalike words must NOT be dropped natively
-    for ok in ("telephone.html", "mailtools/x", "datasheet.pdf"):
-        assert not got[ok], repr(ok)
