@@ -5,10 +5,12 @@ wave expansion with real canonicalize/dedup/rank operators) over a docs table
 derived deterministically from /root/testdata/sf0.001/documents.parquet.
 
 `queries()` exposes one entry per implemented operator family from
-SURVEY.md §2 (+ the training-data ops), each with a DuckDB `oracle_sql()`
-twin. Column names and values are aligned across engines: float aggregations
-go through decimal casts (order-independent exactness) and computed floats
-are rounded identically on both sides.
+SURVEY.md §2, plus the training-data operators not yet cut (exact dedup,
+sampling, chunking, dsir, bpe, pooling, classifier, pii, functions/text.py)
+and SQL-only twins, each with a DuckDB `oracle_sql()` twin. Column names and
+values are aligned across engines: float aggregations go through decimal
+casts (order-independent exactness) and computed floats are rounded
+identically on both sides.
 """
 
 from __future__ import annotations
@@ -147,14 +149,8 @@ def _fp_sql(dialect: str) -> str:
     return f"md5(array_to_string({_TOKS_DUCK}, ' '))"
 
 
-def _shingles_sql(dialect: str, n: int = 3) -> str:
-    """n-word shingles over normalized tokens; requires len(toks) >= n."""
-    if dialect == "spark":
-        t = _TOKS_SPARK
-        return (
-            f"transform(sequence(1, size({t}) - {n - 1}),"
-            f" i -> array_join(slice({t}, i, {n}), ' '))"
-        )
+def _shingles_sql(n: int) -> str:
+    """DuckDB n-word shingles over normalized tokens; requires len(toks) >= n."""
     t = _TOKS_DUCK
     return (
         f"list_transform(generate_series(1, len({t}) - {n - 1}),"
@@ -448,7 +444,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         FROM events GROUP BY date_trunc('hour', ts), event_type"""
     )
 
-    # ---- training-data operators (routed through operators/dedup.py) ------
+    # ---- training-data operators -------------------------------------------
     def q_dedup_exact(spark, sf_dir):
         from siteone_crawler_spark.operators.dedup import exact_duplicates
 
@@ -536,17 +532,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["chunk_documents"] = q_chunk_documents
-
-    def q_semdedup(spark, sf_dir):
-        """SemDeDup cluster-then-prune semantic dedup
-        (operators/similarity.semdedup): IVF assignment (codegen literals),
-        within-cluster cosine prune, keep = lowest id per dup relation."""
-        from siteone_crawler_spark.operators.similarity import semdedup
-
-        _register(spark, sf_dir)
-        return semdedup(spark.table("embeddings"), threshold=0.5, n_centroids=8)
-
-    q["semdedup"] = q_semdedup
 
     def q_dsir_weights(spark, sf_dir):
         """DSIR hashed-ngram importance weights vs an English-target corpus
@@ -711,51 +696,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["classifier_score"] = q_classifier_score
 
-    def q_minhash_sigs(spark, sf_dir):
-        from siteone_crawler_spark.functions.text import token_count
-        from siteone_crawler_spark.operators.dedup import minhash_signatures
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").filter(
-            (F.col("doc_id") < 100) & (token_count(F.col("text")) >= 3)
-        )
-        return minhash_signatures(docs, num_hashes=4).withColumn(
-            "seed", F.col("seed").cast("long")
-        )
-
-    q["minhash_signatures"] = q_minhash_sigs
-
-    def q_minhash_pairs(spark, sf_dir):
-        from siteone_crawler_spark.functions.text import token_count
-        from siteone_crawler_spark.operators.dedup import minhash_candidate_pairs
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").filter(
-            (F.col("doc_id") < 200) & (token_count(F.col("text")) >= 3)
-        )
-        return minhash_candidate_pairs(docs, num_hashes=4, bands=2)
-
-    q["minhash_lsh_pairs"] = q_minhash_pairs
-
-    def q_dedup_clusters(spark, sf_dir):
-        """Pairs -> clusters: transitive closure of the minhash near-dup
-        relation via alternating large/small-star (operators/components.py),
-        one min-id keeper per cluster, singletons included. The oracle
-        closes the same pair set with a recursive CTE — tractable at gate
-        scale, which is exactly why the distributed algorithm exists."""
-        from siteone_crawler_spark.functions.text import token_count
-        from siteone_crawler_spark.operators.components import dedup_clusters
-        from siteone_crawler_spark.operators.dedup import minhash_candidate_pairs
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").filter(
-            (F.col("doc_id") < 200) & (token_count(F.col("text")) >= 3)
-        )
-        pairs = minhash_candidate_pairs(docs, num_hashes=4, bands=2)
-        return dedup_clusters(docs, pairs)
-
-    q["dedup_clusters"] = q_dedup_clusters
-
     def q_gopher_quality(spark, sf_dir):
         """Gopher §A1.1 quality rules (functions/text.gopher_flags): the
         corpus has no newlines/bullets, so both sides append the same two
@@ -788,27 +728,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["gopher_quality"] = q_gopher_quality
 
-    def q_repeated_windows(spark, sf_dir):
-        """Exact repeated-window stats (operators/dedup.repeated_window_
-        stats, the fixed-stride exact-substring dedup): both sides append
-        the same 9-token sentence to every 3rd doc, so cross-doc repeated
-        5-token windows exist by construction."""
-        from siteone_crawler_spark.operators.dedup import repeated_window_stats
-
-        _register(spark, sf_dir)
-        tail = " the quick brown fox jumps over the lazy dog"
-        aug = spark.table("documents").select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 3 == 0, F.concat(F.col("text"), F.lit(tail))
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        return repeated_window_stats(aug, window=5)
-
-    q["repeated_windows"] = q_repeated_windows
-
     def q_split_assign(spark, sf_dir):
         """Deterministic 80/10/10 train/val/test assignment (operators/
         sampling.split_assign): content-addressed md5 thresholds, disjoint
@@ -824,43 +743,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["split_assign"] = q_split_assign
-
-    def q_quantize_embeddings(spark, sf_dir):
-        """SQ8 embedding quantization (operators/similarity.quantize_
-        embeddings): codes bit-exact vs the oracle (explicit half-up
-        floor), scale/max_err rounded 6 dp."""
-        from siteone_crawler_spark.operators.similarity import quantize_embeddings
-
-        _register(spark, sf_dir)
-        return quantize_embeddings(spark.table("embeddings"))
-
-    q["quantize_embeddings"] = q_quantize_embeddings
-
-    def q_ngram_jaccard(spark, sf_dir):
-        """n-gram Jaccard near-dup pipeline: LSH-banded candidates verified
-        by exact 3-shingle-set Jaccard (operators/dedup.near_duplicates_minhash)."""
-        from siteone_crawler_spark.functions.text import token_count
-        from siteone_crawler_spark.operators.dedup import near_duplicates_minhash
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").filter(
-            (F.col("doc_id") < 200) & (token_count(F.col("text")) >= 3)
-        )
-        return near_duplicates_minhash(docs, threshold=0.5, num_hashes=4, bands=2)
-
-    q["ngram_jaccard_pairs"] = q_ngram_jaccard
-
-    def q_cdc_pairs(spark, sf_dir):
-        """Content-defined-chunking near-dups: md5-window boundaries,
-        chunk-multiset overlap via inverted-index join
-        (operators/dedup.cdc_near_duplicates)."""
-        from siteone_crawler_spark.operators.dedup import cdc_near_duplicates
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").filter(F.col("doc_id") < 150)
-        return cdc_near_duplicates(docs, threshold=0.3)
-
-    q["cdc_near_dups"] = q_cdc_pairs
 
     def q_subword_tokens(spark, sf_dir):
         """BPE-ish subword token counts per language
@@ -945,54 +827,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return span_signature(docs)
 
     q["span_signature"] = q_span_signature
-
-    def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Brute-force cosine top-k (native zip_with/aggregate dot product)."""
-        from siteone_crawler_spark.operators.similarity import cosine_topk
-
-        _register(spark, sf_dir)
-        emb = spark.table("embeddings")
-        qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        return cosine_topk(emb, qv, k=10)
-
-    q["knn_cosine_topk"] = q_knn
-
-    def q_knn_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """SRP/LSH-bucketed approximate nearest neighbors (scale path).
-        Full DuckDB twin in oracle_sql() replicates the signed-random-
-        projection buckets and multiprobe."""
-        from siteone_crawler_spark.operators.similarity import srp_topk
-
-        _register(spark, sf_dir)
-        emb = spark.table("embeddings")
-        qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        return srp_topk(emb, qv, k=10, n_planes=6, multiprobe_hamming=1)
-
-    q["knn_srp_topk"] = q_knn_srp
-
-    def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """IVF ANN: probe the 2 nearest of 8 inverted lists (deterministic
-        pivot centroids = vectors of the 8 smallest ids), exact cosine
-        within. operators/similarity.ivf_topk."""
-        from siteone_crawler_spark.operators.similarity import ivf_topk
-
-        _register(spark, sf_dir)
-        emb = spark.table("embeddings")
-        qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        return ivf_topk(emb, qv, k=10, n_centroids=8, nprobe=2)
-
-    q["knn_ivf_topk"] = q_knn_ivf
-
-    def q_emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Embedding-cosine near-dup pairs via SRP blocking
-        (operators/similarity.embedding_near_dup_pairs)."""
-        from siteone_crawler_spark.operators.similarity import embedding_near_dup_pairs
-
-        _register(spark, sf_dir)
-        emb = spark.table("embeddings")
-        return embedding_near_dup_pairs(emb, threshold=0.4, n_planes=6)
-
-    q["embedding_near_dups"] = q_emb_near_dups
 
     def q_security_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Security-header SuperTable (operators/security.security_stats —
@@ -1378,16 +1212,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["duplicate_titles_meta"] = q_dup_titles_meta
 
-    def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """SimHash near-dup pairs (Hamming-LSH blocked). Full DuckDB twin in
-        oracle_sql() re-derives the md5-low-64 bit voting in SQL."""
-        from siteone_crawler_spark.operators.dedup import simhash_near_pairs
-
-        _register(spark, sf_dir)
-        return simhash_near_pairs(spark.table("documents"), max_hamming=12)
-
-    q["simhash_near_pairs"] = q_simhash_pairs
-
     def q_extra_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         """F15 extra-columns over planted HTML: xpath text/attr extraction
         (DOM selector engine, functions/extra_columns.extract_xpath —
@@ -1492,17 +1316,13 @@ _PYTEST_ONLY = (
     "visited_source_domain_stats",
     "visited_basic_stats",
     # post-width training ops (the gate already holds the first-class
-    # training rows incl. dedup_clusters); full DuckDB oracles run in the
-    # pytest gate
+    # training rows); full DuckDB oracles run in the pytest gate
     "temperature_sample",
     "pack_sequences",
     "classifier_score",
     "gopher_quality",
-    "repeated_windows",
     "split_assign",
-    "quantize_embeddings",
     "chunk_documents",
-    "semdedup",
     "dsir_weights",
     "bpe_pair_stats",
     "mean_pool",
@@ -1682,7 +1502,7 @@ def _all_oracle_sql() -> dict[str, str]:
           FROM documents)
         WHERE rn <= 25"""
 
-    _sh3 = _shingles_sql("duck", 3)
+    _sh3 = _shingles_sql(3)
     o["repetition_ratio"] = f"""
         SELECT doc_id,
           CASE WHEN len({_sh3}) > 0
@@ -1704,41 +1524,9 @@ def _all_oracle_sql() -> dict[str, str]:
           CAST(least(32, len(toks) - st) AS int) AS n_tokens
         FROM s"""
 
-    # SemDeDup (operators/similarity.semdedup, threshold=0.5, 8 pivot
-    # centroids): same cents/assign/best CTEs as knn_ivf_topk (ties ->
-    # larger centroid id = ivf_assign's array_max rule; the 8 smallest
-    # vec_ids are 0..7 so centroid vec_id == bucket index), then the keep
-    # rule keep(d) iff no e<d in d's cluster with round(cos,6) >= 0.5
-    o["semdedup"] = """
-        WITH cents AS (
-          SELECT vec_id AS cid, cast(embedding AS double[]) AS cv
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-        ),
-        assign AS (
-          SELECT e.vec_id, c.cid,
-            round(list_cosine_similarity(cast(e.embedding AS double[]), c.cv), 9) AS ccos
-          FROM embeddings e CROSS JOIN cents c
-        ),
-        best AS (
-          SELECT vec_id, cid FROM (
-            SELECT vec_id, cid,
-              row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS rn
-            FROM assign) t WHERE rn = 1
-        ),
-        dups AS (
-          SELECT DISTINCT b2.vec_id AS dup
-          FROM best b1 JOIN best b2 ON b1.cid = b2.cid AND b1.vec_id < b2.vec_id
-          JOIN embeddings e1 ON e1.vec_id = b1.vec_id
-          JOIN embeddings e2 ON e2.vec_id = b2.vec_id
-          WHERE round(list_cosine_similarity(cast(e1.embedding AS double[]),
-                                             cast(e2.embedding AS double[])), 6) >= 0.5
-        )
-        SELECT b.vec_id, CAST(b.cid AS int) AS cluster, (d.dup IS NULL) AS keep
-        FROM best b LEFT JOIN dups d ON b.vec_id = d.dup"""
-
     # DSIR importance weights (operators/dsir.py, n_buckets=256, alpha=1,
     # unigrams+bigrams, target = lang='en'): md5-low-32 bucket hashing is
-    # the same engine-portable idiom as simhash's md5-low-64
+    # engine-portable (both engines print the same md5 hex)
     o["dsir_weights"] = f"""
         WITH toks AS (SELECT doc_id, lang, {_TOKS_DUCK} AS tk FROM documents),
         uni AS (SELECT doc_id, lang, unnest(tk) AS g FROM toks),
@@ -1899,76 +1687,6 @@ def _all_oracle_sql() -> dict[str, str]:
                  AS quality_prob
         FROM documents d LEFT JOIN dots USING (doc_id)"""
 
-    o["minhash_signatures"] = f"""
-        WITH sh AS (
-          SELECT doc_id, unnest({_shingles_sql('duck')}) AS shingle
-          FROM documents
-          WHERE doc_id < 100 AND len({_TOKS_DUCK}) >= 3
-        ), seeded AS (
-          SELECT doc_id, shingle, unnest(generate_series(0, 3)) AS seed FROM sh
-        )
-        SELECT doc_id, seed,
-               min(md5(cast(seed AS string) || '|' || shingle)) AS minhash
-        FROM seeded GROUP BY doc_id, seed"""
-
-    o["minhash_lsh_pairs"] = f"""
-        WITH sh AS (
-          SELECT doc_id, unnest({_shingles_sql('duck')}) AS shingle
-          FROM documents
-          WHERE doc_id < 200 AND len({_TOKS_DUCK}) >= 3
-        ), seeded AS (
-          SELECT doc_id, shingle, unnest(generate_series(0, 3)) AS seed FROM sh
-        ), sig AS (
-          SELECT doc_id, seed,
-                 min(md5(cast(seed AS string) || '|' || shingle)) AS minhash
-          FROM seeded GROUP BY doc_id, seed
-        ), bands AS (
-          SELECT doc_id, cast(floor(seed / 2) AS int) AS band,
-                 md5(array_to_string(list_sort(list(minhash)), ',')) AS band_key
-          FROM sig GROUP BY doc_id, cast(floor(seed / 2) AS int)
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands
-        FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-        WHERE a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id"""
-
-    o["dedup_clusters"] = f"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id, unnest({_shingles_sql('duck')}) AS shingle
-          FROM documents
-          WHERE doc_id < 200 AND len({_TOKS_DUCK}) >= 3
-        ), seeded AS (
-          SELECT doc_id, shingle, unnest(generate_series(0, 3)) AS seed FROM sh
-        ), sig AS (
-          SELECT doc_id, seed,
-                 min(md5(cast(seed AS string) || '|' || shingle)) AS minhash
-          FROM seeded GROUP BY doc_id, seed
-        ), bands AS (
-          SELECT doc_id, cast(floor(seed / 2) AS int) AS band,
-                 md5(array_to_string(list_sort(list(minhash)), ',')) AS band_key
-          FROM sig GROUP BY doc_id, cast(floor(seed / 2) AS int)
-        ), pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.band_key = b.band_key
-          WHERE a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        ), nodes AS (
-          SELECT doc_id FROM documents
-          WHERE doc_id < 200 AND len({_TOKS_DUCK}) >= 3
-        ), edges AS (
-          SELECT doc_a AS s, doc_b AS d FROM pairs
-          UNION
-          SELECT doc_b AS s, doc_a AS d FROM pairs
-        ), reach AS (
-          SELECT doc_id AS node, doc_id AS lbl FROM nodes
-          UNION
-          SELECT e.d AS node, r.lbl FROM reach r JOIN edges e ON e.s = r.node
-        )
-        SELECT node AS doc_id, min(lbl) AS component,
-               (min(lbl) = node) AS is_keeper
-        FROM reach GROUP BY node"""
-
     o["gopher_quality"] = f"""
         WITH aug AS (
           SELECT doc_id,
@@ -2019,32 +1737,6 @@ def _all_oracle_sql() -> dict[str, str]:
                 AND stop_hits >= 2) AS keep
         FROM sig"""
 
-    o["repeated_windows"] = f"""
-        WITH aug AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0
-                      THEN text || ' the quick brown fox jumps over the lazy dog'
-                      ELSE text END AS text
-          FROM documents
-        ), occ AS (
-          SELECT doc_id, md5(w) AS h FROM (
-            SELECT doc_id, unnest({_shingles_sql('duck', 5)}) AS w FROM aug)
-        ), hot AS (
-          SELECT h FROM occ GROUP BY h HAVING count(*) >= 2
-        ), per AS (
-          SELECT doc_id, count(*) AS n_repeated FROM occ
-          WHERE h IN (SELECT h FROM hot) GROUP BY doc_id
-        ), base AS (
-          SELECT doc_id, greatest(len({_TOKS_DUCK}) - 4, 0) AS n_windows
-          FROM aug
-        )
-        SELECT base.doc_id, n_windows,
-               coalesce(per.n_repeated, 0) AS n_repeated,
-               round(CASE WHEN n_windows > 0
-                     THEN coalesce(per.n_repeated, 0) / n_windows
-                     ELSE 0.0 END, 6) AS repeated_ratio
-        FROM base LEFT JOIN per ON base.doc_id = per.doc_id"""
-
     o["split_assign"] = """
         SELECT doc_id,
                CASE WHEN substr(md5(cast(doc_id AS varchar) || 'sp1'), 1, 4)
@@ -2053,21 +1745,6 @@ def _all_oracle_sql() -> dict[str, str]:
                          < '3333' THEN 'test'
                     ELSE 'train' END AS split
         FROM documents"""
-
-    o["quantize_embeddings"] = """
-        WITH q AS (
-          SELECT vec_id, embedding,
-                 greatest(list_max(list_transform(embedding, x -> abs(x))),
-                          1e-12) / 127.0 AS s
-          FROM embeddings
-        )
-        SELECT vec_id,
-               list_transform(embedding,
-                              x -> CAST(floor(x / s + 0.5) AS INTEGER)) AS codes,
-               round(s, 6) AS scale,
-               round(list_max(list_transform(embedding,
-                     x -> abs(floor(x / s + 0.5) * s - x))), 6) AS max_err
-        FROM q"""
 
     o["sitemap_order"] = (
         _URLS_CTE
@@ -2134,14 +1811,6 @@ def _all_oracle_sql() -> dict[str, str]:
               'a_href' || chr(31) || u2 || chr(31) || u2 || chr(31) ||
               'a_href' || chr(31) || u3 || chr(31) || u3) AS sig
         FROM u"""
-
-    o["knn_cosine_topk"] = """
-        WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id,
-               round(list_cosine_similarity(cast(embedding AS double[]),
-                                            cast(qv AS double[])), 6) AS cos
-        FROM embeddings, q
-        ORDER BY cos DESC, vec_id ASC LIMIT 10"""
 
     # ---- operator-routed analyzer oracles over the derived visited table ---
     o["visited_basic_stats"] = (
@@ -2317,81 +1986,6 @@ def _all_oracle_sql() -> dict[str, str]:
         FROM documents
         GROUP BY doc_id * 31 % 113 HAVING count(*) > 1"""
 
-    # SRP/LSH ANN: the oracle REPLICATES the deterministic ±1 hyperplanes
-    # (md5-parity signs, similarity.hyperplane_signs) and the multiprobe
-    # bucket pruning in pure SQL, then takes exact cosine top-k within the
-    # probed buckets — a full independent twin of the bucketed ANN path.
-    o["knn_srp_topk"] = """
-        WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-        ps AS (SELECT unnest(generate_series(0, 5)) AS p),
-        planes AS (
-          SELECT p, d,
-            CASE WHEN ('0x' || substring(md5(cast(p AS string) || '|'
-                 || cast(d AS string)), 1, 2))::INT % 2 = 0
-            THEN 1.0 ELSE -1.0 END AS w
-          FROM ps, dims
-        ),
-        vecexp AS (
-          SELECT vec_id, d, cast(embedding[d + 1] AS double) AS x
-          FROM embeddings, dims
-        ),
-        dots AS (
-          SELECT vec_id, p, sum(x * w) AS dot
-          FROM vecexp JOIN planes USING (d) GROUP BY vec_id, p
-        ),
-        buckets AS (
-          SELECT vec_id,
-            cast(sum(CASE WHEN dot >= 0 THEN 1 << p ELSE 0 END) AS bigint) AS bucket
-          FROM dots GROUP BY vec_id
-        ),
-        qb AS (SELECT bucket AS qbucket FROM buckets WHERE vec_id = 0),
-        cand AS (
-          SELECT b.vec_id FROM buckets b, qb
-          WHERE bit_count(cast(xor(b.bucket, qb.qbucket) AS bigint)) <= 1
-        ),
-        q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        SELECT e.vec_id,
-          round(list_cosine_similarity(cast(e.embedding AS double[]),
-                                       cast(q.qv AS double[])), 6) AS cos
-        FROM embeddings e JOIN cand USING (vec_id), q
-        ORDER BY cos DESC, vec_id ASC LIMIT 10"""
-
-    # n-gram Jaccard near-dups: the minhash-band twin supplies candidates,
-    # then exact Jaccard over DISTINCT 3-shingle sets (dedup.jaccard_pairs)
-    o["ngram_jaccard_pairs"] = f"""
-        WITH sh AS (
-          SELECT doc_id, unnest({_shingles_sql('duck')}) AS shingle
-          FROM documents
-          WHERE doc_id < 200 AND len({_TOKS_DUCK}) >= 3
-        ), seeded AS (
-          SELECT doc_id, shingle, unnest(generate_series(0, 3)) AS seed FROM sh
-        ), sig AS (
-          SELECT doc_id, seed,
-                 min(md5(cast(seed AS string) || '|' || shingle)) AS minhash
-          FROM seeded GROUP BY doc_id, seed
-        ), bands AS (
-          SELECT doc_id, cast(floor(seed / 2) AS int) AS band,
-                 md5(array_to_string(list_sort(list(minhash)), ',')) AS band_key
-          FROM sig GROUP BY doc_id, cast(floor(seed / 2) AS int)
-        ), cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-          WHERE a.doc_id < b.doc_id GROUP BY a.doc_id, b.doc_id
-        ), sets AS (
-          SELECT doc_id, list_distinct({_shingles_sql('duck')}) AS shl
-          FROM documents WHERE doc_id < 200 AND len({_TOKS_DUCK}) >= 3
-        )
-        SELECT doc_a, doc_b, jaccard FROM (
-          SELECT c.doc_a, c.doc_b,
-            round(CASE WHEN len(list_distinct(list_concat(sa.shl, sb.shl))) > 0
-              THEN len(list_intersect(sa.shl, sb.shl)) * 1.0
-                   / len(list_distinct(list_concat(sa.shl, sb.shl)))
-              ELSE 0.0 END, 6) AS jaccard
-          FROM cand c
-          JOIN sets sa ON c.doc_a = sa.doc_id
-          JOIN sets sb ON c.doc_b = sb.doc_id
-        ) t WHERE jaccard >= 0.5"""
-
     # BPE-ish subword tokens: the oracle reruns the same RE2-safe
     # pre-tokenizer regex and the per-token 4-char-block extras
     o["subword_token_count"] = r"""
@@ -2408,85 +2002,6 @@ def _all_oracle_sql() -> dict[str, str]:
             AS bigint) AS total_subword_tokens,
           cast(count(*) AS bigint) AS n_docs
         FROM r GROUP BY lang ORDER BY lang"""
-
-    # CDC near-dups: full SQL twin — the oracle recomputes the md5-window
-    # boundaries, chunk hashes and multiset overlap independently
-    o["cdc_near_dups"] = """
-        WITH d AS (
-          SELECT doc_id, text FROM documents WHERE cast(doc_id AS bigint) < 150
-        ),
-        b AS (
-          SELECT doc_id, text,
-            [1] || list_filter(
-              generate_series(2, greatest(length(text) - 7, 1)),
-              i -> ('0x' || substring(md5(substring(text, i, 8)), 1, 4))::INT % 16 = 0
-            ) || [length(text) + 1] AS bounds
-          FROM d
-        ),
-        ch AS (
-          SELECT doc_id,
-            unnest(list_transform(
-              generate_series(1, len(bounds) - 1),
-              k -> md5(substring(text, bounds[k], bounds[k + 1] - bounds[k]))
-            )) AS chunk_hash
-          FROM b
-        ),
-        cc AS (
-          SELECT doc_id, chunk_hash, count(*) AS n FROM ch GROUP BY doc_id, chunk_hash
-        ),
-        tot AS (SELECT doc_id, sum(n) AS total FROM cc GROUP BY doc_id),
-        keepch AS (
-          SELECT chunk_hash FROM cc GROUP BY chunk_hash HAVING count(*) <= 10000
-        ),
-        cc2 AS (SELECT cc.* FROM cc JOIN keepch USING (chunk_hash)),
-        sh AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, sum(least(a.n, b.n)) AS shared
-          FROM cc2 a JOIN cc2 b
-            ON a.chunk_hash = b.chunk_hash AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b, overlap FROM (
-          SELECT doc_a, doc_b,
-            round(shared * 1.0 / least(ta.total, tb.total), 6) AS overlap
-          FROM sh
-          JOIN tot ta ON ta.doc_id = sh.doc_a
-          JOIN tot tb ON tb.doc_id = sh.doc_b
-        ) t WHERE overlap >= 0.3"""
-
-    # Embedding near-dup pairs: SRP-bucket twin (6 md5-parity hyperplanes,
-    # as in knn_srp_topk) -> same-bucket pairs -> exact cosine >= threshold
-    o["embedding_near_dups"] = """
-        WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-        ps AS (SELECT unnest(generate_series(0, 5)) AS p),
-        planes AS (
-          SELECT p, d,
-            CASE WHEN ('0x' || substring(md5(cast(p AS string) || '|'
-                 || cast(d AS string)), 1, 2))::INT % 2 = 0
-            THEN 1.0 ELSE -1.0 END AS w
-          FROM ps, dims
-        ),
-        vecexp AS (
-          SELECT vec_id, d, cast(embedding[d + 1] AS double) AS x
-          FROM embeddings, dims
-        ),
-        dots AS (
-          SELECT vec_id, p, sum(x * w) AS dot
-          FROM vecexp JOIN planes USING (d) GROUP BY vec_id, p
-        ),
-        buckets AS (
-          SELECT vec_id,
-            cast(sum(CASE WHEN dot >= 0 THEN 1 << p ELSE 0 END) AS bigint) AS bucket
-          FROM dots GROUP BY vec_id
-        )
-        SELECT id_a, id_b, cos FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-            round(list_cosine_similarity(cast(ea.embedding AS double[]),
-                                         cast(eb.embedding AS double[])), 6) AS cos
-          FROM buckets a
-          JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-          JOIN embeddings ea ON ea.vec_id = a.vec_id
-          JOIN embeddings eb ON eb.vec_id = b.vec_id
-        ) t WHERE cos >= 0.4"""
 
     # SEO fixtures: the oracle reconstructs the planted fields purely
     # arithmetically — it never parses HTML, so the Spark-side regexp
@@ -2711,74 +2226,6 @@ def _all_oracle_sql() -> dict[str, str]:
         FROM (SELECT CASE did%3 WHEN 0 THEN 1 ELSE 4 END AS sev
               FROM d WHERE did%3 < 2) t
         ORDER BY header"""
-
-    # IVF ANN: the oracle REPLICATES the index — pivot centroids = vectors
-    # of the 8 smallest ids, assignment = argmax cosine (ties -> larger
-    # centroid id, matching Spark's array_max-on-struct), probe = the 2
-    # centroids nearest the query, exact cosine top-k within probed lists.
-    o["knn_ivf_topk"] = """
-        WITH cents AS (
-          SELECT vec_id AS cid, cast(embedding AS double[]) AS cv
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-        ),
-        assign AS (
-          SELECT e.vec_id, c.cid,
-            round(list_cosine_similarity(cast(e.embedding AS double[]), c.cv), 9) AS ccos
-          FROM embeddings e CROSS JOIN cents c
-        ),
-        best AS (
-          SELECT vec_id, cid FROM (
-            SELECT vec_id, cid,
-              row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid DESC) AS rn
-            FROM assign) t WHERE rn = 1
-        ),
-        qprobe AS (
-          SELECT cid FROM assign WHERE vec_id = 0 ORDER BY ccos DESC, cid DESC LIMIT 2
-        ),
-        q AS (SELECT cast(embedding AS double[]) AS qv FROM embeddings WHERE vec_id = 0)
-        SELECT e.vec_id,
-          round(list_cosine_similarity(cast(e.embedding AS double[]), q.qv), 6) AS cos
-        FROM embeddings e
-        JOIN best b USING (vec_id) JOIN qprobe p ON b.cid = p.cid, q
-        ORDER BY cos DESC, vec_id ASC LIMIT 10"""
-
-    # SimHash near-dup pairs: full SQL twin — md5-low-64 token hashes,
-    # per-bit majority vote (ties -> 0), 16-bit Hamming-LSH blocking, exact
-    # Hamming verify (operators/dedup.simhash64 + simhash_near_pairs).
-    o["simhash_near_pairs"] = f"""
-        WITH toks AS (
-          SELECT doc_id, unnest({_TOKS_DUCK}) AS t FROM documents
-        ),
-        th AS (
-          SELECT doc_id, ('0x' || substring(md5(t), 1, 16))::UBIGINT AS h FROM toks
-        ),
-        bits AS (
-          SELECT doc_id, b,
-            sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-          FROM th, (SELECT unnest(generate_series(0, 63)) AS b)
-          GROUP BY doc_id, b
-        ),
-        fp0 AS (
-          SELECT doc_id,
-            cast(sum(CASE WHEN vote > 0 THEN
-              (CASE WHEN b = 63 THEN -9223372036854775808
-                    ELSE (1::BIGINT << b) END) ELSE 0 END) AS bigint) AS simhash
-          FROM bits GROUP BY doc_id
-        ),
-        fp AS (
-          SELECT d.doc_id, coalesce(f.simhash, 0) AS simhash
-          FROM documents d LEFT JOIN fp0 f USING (doc_id)
-        ),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(bit_count(cast(xor(a.simhash, b.simhash) AS bigint)) AS int) AS hamming
-          FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-          WHERE ((a.simhash >> 0) & 65535) = ((b.simhash >> 0) & 65535)
-             OR ((a.simhash >> 16) & 65535) = ((b.simhash >> 16) & 65535)
-             OR ((a.simhash >> 32) & 65535) = ((b.simhash >> 32) & 65535)
-             OR ((a.simhash >> 48) & 65535) = ((b.simhash >> 48) & 65535)
-        )
-        SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 12"""
 
     return o
 

@@ -9,10 +9,10 @@ analyzer/exporter queries expressed as plain DataFrame aggregations.
 
 Package layout:
   functions/   vectorized scalar kernels (URL canonicalize, robots match,
-               hashing, text analysis)
+               cache headers, text analysis)
   sources/     docs/seed readers + the checkpointed table contract
-  operators/   frontier wave step, seen-set anti-join, dedup family,
-               similarity search, analyzer aggregations, politeness
+  operators/   frontier ordering, seen-set anti-join, SiteOne analyzers
+               and reports, plus training-data operators not yet cut
   plans/       explain/inspection helpers
   streaming/   wave-as-microbatch driver helpers
   engine.py    the iterative wave driver with checkpoint/resume

@@ -5,11 +5,10 @@ flags and lifetime at /root/reference/src/engine/crawler.rs:1744-1818,
 bitflag constants at src/result/visited_url.rs:19-36, label at
 visited_url.rs:256-279.
 
-Both a pure-Python kernel (unit-testable, simulator-friendly) and native
-Catalyst expressions (the engine's hot path — header flag math is pure
-string containment, no Python needed) are provided. Headers are carried as
-a `map<string,string>` column with LOWERCASED keys, mirroring the
-reference's normalized HashMap.
+All three are native Catalyst expressions (the engine's hot path — header
+flag math is pure string containment, no Python needed). Headers are
+carried as a `map<string,string>` column with LOWERCASED keys, mirroring
+the reference's normalized HashMap.
 """
 
 from __future__ import annotations
@@ -54,50 +53,6 @@ _HEADER_FLAGS = (
     (HAS_ETAG, "etag"),
     (HAS_LAST_MODIFIED, "last-modified"),
 )
-
-
-def cache_type_flags(headers: dict | None) -> int:
-    """Python kernel twin of crawler.rs:1744-1803. None headers (request
-    never made: -6 short-circuit / connect fail) -> NOT_AVAILABLE."""
-    if headers is None:
-        return NOT_AVAILABLE
-    flags = 0
-    cc = headers.get("cache-control")
-    if cc is not None:
-        flags |= HAS_CACHE_CONTROL
-        low = cc.lower()
-        for flag, token in _CC_TOKEN_FLAGS:
-            if token in low:
-                flags |= flag
-        if "s-maxage" in low or "s-max-age" in low:
-            flags |= HAS_S_MAX_AGE
-    for flag, name in _HEADER_FLAGS:
-        if name in headers:
-            flags |= flag
-    return flags if flags else NO_CACHE_HEADERS
-
-
-def cache_lifetime(headers: dict | None) -> int | None:
-    """First max-age=N digits in Cache-Control (crawler.rs:1806-1818)."""
-    if headers is None:
-        return None
-    cc = headers.get("cache-control")
-    if cc is None:
-        return None
-    low = cc.lower()
-    pos = low.find("max-age=")
-    if pos < 0:
-        return None
-    digits = ""
-    for ch in low[pos + 8 :]:
-        if ch.isdigit():
-            digits += ch
-        else:
-            break
-    return int(digits) if digits else None
-
-
-# --- native Catalyst expressions (no Python in the hot path) ----------------
 
 
 def cache_flags_expr(headers_col):

@@ -5,10 +5,9 @@ codegen) — no Python in the hot path — and each has a DuckDB-SQL-expressible
 twin so the driver's oracle can verify values bit-for-bit:
 
   - tokenization + token counts (whitespace + alnum-normalized)
-  - quality scoring (length / punctuation / stopword ratios)
-  - language ID (stopword-hit heuristic over a tiny per-language lexicon)
   - document fingerprinting (md5 of the normalized token stream)
-  - word n-gram shingles (the dedup family's input)
+  - a BPE-style subword token estimate
+  - duplicate n-gram fraction and the Gopher quality rules
 
 The reference crawler's text analysis surface is thinner (title/description
 extraction + DOM counts, /root/reference/src/engine/crawler.rs:901-937); this
@@ -19,14 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# tiny, deterministic stopword lexicons (heuristic language ID only)
-STOPWORDS = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
-    "es": ["el", "la", "de", "y", "que", "en", "los", "se", "del", "las"],
-    "fr": ["le", "la", "de", "et", "les", "des", "en", "un", "du", "une"],
-    "zh": ["de5", "shi4", "zai4", "le5", "he2", "you3", "wo3", "ta1", "zhe4", "men5"],
-}
 
 
 def norm_tokens(col) -> Column:
@@ -42,7 +33,7 @@ def _let(value, body) -> Column:
     interpreted eval), so every textual reference to e.g. norm_tokens(col)
     re-runs the whole regexp+split tokenization. Binding it as the element
     of a single-element transform() makes every inner reference a value
-    lookup — the same measured 3-6.7x win as word_shingles/word_grams.
+    lookup — the same measured 3-6.7x win as operators/dsir.word_grams.
     `body` gets the bound Column and returns one Column; nested _let calls
     compose (bind a struct to let-bind several values at once)."""
     return F.element_at(F.transform(F.array(value), body), 1)
@@ -52,8 +43,10 @@ def token_count(col) -> Column:
     return F.size(norm_tokens(col))
 
 
-def char_count(col) -> Column:
-    return F.length(col)
+def fingerprint(col) -> Column:
+    """Normalized-content fingerprint: md5 over the space-joined token stream
+    (whitespace/punct/case-insensitive duplicate detector)."""
+    return F.md5(F.concat_ws(" ", norm_tokens(col)))
 
 
 # GPT-2-style pre-tokenizer (public pattern family): contractions, an
@@ -86,112 +79,6 @@ def subword_token_count(col) -> Column:
     return _let(F.regexp_extract_all(col, F.lit(f"({BPE_PRETOKEN_RE})"), 1), build)
 
 
-def punct_ratio(col) -> Column:
-    """Fraction of characters that are not alnum/space."""
-    stripped = F.length(F.regexp_replace(col, "[a-zA-Z0-9 ]", ""))
-    return F.when(F.length(col) > 0, stripped / F.length(col)).otherwise(F.lit(0.0))
-
-
-def stopword_hits(col, lang: str = "en") -> Column:
-    words = STOPWORDS[lang]
-    return F.size(F.filter(norm_tokens(col), lambda t: t.isin(*words)))
-
-
-def stopword_ratio(col, lang: str = "en") -> Column:
-    n = token_count(col)
-    return F.when(n > 0, stopword_hits(col, lang) / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col) -> Column:
-    """Deterministic [0,1] quality heuristic: rewards reasonable length and
-    stopword presence, penalizes punctuation soup. Weights are arbitrary but
-    fixed — the value of the operator is the vectorized plumbing. The token
-    array is _let-bound (3 tokenizations per row otherwise); the arithmetic
-    is unchanged expression-for-expression, so values stay bit-identical."""
-
-    def build(toks):
-        n_tok = F.size(toks)
-        len_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-        words = STOPWORDS["en"]
-        hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
-        sw_ratio = F.when(n_tok > 0, hits / n_tok).otherwise(F.lit(0.0))
-        sw_score = F.least(sw_ratio * 5.0, F.lit(1.0))
-        punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(col) * 4.0)
-        return F.round(0.4 * len_score + 0.3 * sw_score + 0.3 * punct_pen, 6)
-
-    return _let(norm_tokens(col), build)
-
-
-def lang_guess(col) -> Column:
-    """argmax over per-language stopword hit counts; ties -> lexicographic
-    language order; zero hits everywhere -> 'und'. Two _let levels: the
-    token array (one tokenization per row instead of four) and the hit
-    counts (the when-chain references each count up to three times)."""
-
-    def hit_filter(words):
-        # factory closure: HOF lambdas must be single-parameter
-        return lambda t: t.isin(*words)
-
-    def pick(hs):
-        hits = {lang: hs[lang] for lang in STOPWORDS}
-        best = None
-        best_lang = F.lit("und")
-        for lang in sorted(STOPWORDS):  # deterministic tie-break
-            h = hits[lang]
-            if best is None:
-                best = F.when(h > 0, h).otherwise(F.lit(0))
-                best_lang = F.when(h > 0, F.lit(lang)).otherwise(F.lit("und"))
-            else:
-                better = h > best
-                best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-                best = F.when(better, h).otherwise(best)
-        return best_lang
-
-    return _let(
-        norm_tokens(col),
-        lambda toks: _let(
-            F.struct(
-                *[
-                    F.size(F.filter(toks, hit_filter(words))).alias(lang)
-                    for lang, words in STOPWORDS.items()
-                ]
-            ),
-            pick,
-        ),
-    )
-
-
-def fingerprint(col) -> Column:
-    """Normalized-content fingerprint: md5 over the space-joined token stream
-    (whitespace/punct/case-insensitive duplicate detector)."""
-    return F.md5(F.concat_ws(" ", norm_tokens(col)))
-
-
-def _shingles_of(tk, n: int) -> Column:
-    """n-word shingles over an ALREADY-BOUND token array (a _let lambda
-    variable — never pass a raw norm_tokens(col) expression here, each
-    slice would re-tokenize). Uses slice() (bounds-safe) so the dead
-    branch of the `when` can never throw under ANSI mode (Spark evaluates
-    both branches)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(1)))
-    return F.when(
-        F.size(tk) >= n,
-        F.transform(idx, lambda i: F.array_join(F.slice(tk, i, n), " ")),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingles(col, n: int = 3) -> Column:
-    """Array of n-word shingles (space-joined), [] when fewer than n tokens.
-
-    The token array is LET-BOUND (_let): Catalyst skips subexpression
-    elimination inside higher-order-function lambdas, so slicing
-    `norm_tokens(col)` directly in the per-index lambda re-runs the whole
-    regexp+split tokenization once per shingle POSITION — ~O(doc tokens)
-    re-tokenizations per row (the same measured 6.7x cost as
-    operators/dsir.word_grams). A lambda variable is evaluated once."""
-    return _let(norm_tokens(col), lambda tk: _shingles_of(tk, n))
-
-
 def ngram_repetition(col, n: int = 3) -> Column:
     """Gopher-style duplicate n-gram fraction: 1 - distinct/total over the
     word n-gram shingles; 0.0 for docs with fewer than n tokens. High values
@@ -206,11 +93,13 @@ def ngram_repetition(col, n: int = 3) -> Column:
 
     def build(tk):
         n_total = F.size(tk) - (n - 1)
+        # slice() is bounds-safe, so the dead branch of the `when` cannot
+        # throw under ANSI mode (Spark evaluates both branches)
+        idx = F.sequence(F.lit(1), F.greatest(n_total, F.lit(1)))
+        shingles = F.transform(idx, lambda i: F.array_join(F.slice(tk, i, n), " "))
         return F.when(
             n_total > 0,
-            (n_total - F.size(F.array_distinct(_shingles_of(tk, n))))
-            .cast("double")
-            / n_total,
+            (n_total - F.size(F.array_distinct(shingles))).cast("double") / n_total,
         ).otherwise(F.lit(0.0))
 
     return _let(norm_tokens(col), build)

@@ -1,2 +1,4 @@
 """Frontier-engine operators: ordering, seen-set, candidate pipeline,
-politeness, dedup family, similarity search, analyzer aggregations."""
+politeness, analyzer aggregations, and the training-data operators
+(exact dedup, connected components, sampling, chunking, dsir, bpe, pooling,
+classifier, pii) not yet cut."""

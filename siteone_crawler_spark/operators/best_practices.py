@@ -65,7 +65,7 @@ def _svg_exprs(body):
     # `svgs`/`hashes` reference inside the dup-group lambdas below would
     # otherwise re-run the full-body regexp_extract_all scan per distinct
     # hash (Catalyst skips subexpression elimination in higher-order-function
-    # lambdas — same measured pathology as functions/text.word_shingles)
+    # lambdas — same measured pathology as operators/dsir.word_grams)
     def stats(svgs):
         n_large = F.size(
             F.filter(svgs, lambda s: F.length(s) > MAX_INLINE_SVG_SIZE)

@@ -1,14 +1,13 @@
 """Distributed connected components — near-dup pairs into dedup clusters.
 
-The dedup family (operators/dedup.py, operators/similarity.py) produces
-PAIRS (doc_a, doc_b). Corpus curation needs CLUSTERS: the transitive
-closure of the near-dup relation, one canonical keeper per cluster — pair
-(A,B) + pair (B,C) must retire both B and C, not just one of them. At
-10^10 documents the closure cannot be driver-side union-find; this module
-implements the alternating large-star / small-star algorithm (Kiveris,
-Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
-MapReduce and Beyond", ACM SoCC 2014, public) as pure DataFrame joins and
-aggregates:
+Near-dup detectors produce PAIRS (doc_a, doc_b). Corpus curation needs
+CLUSTERS: the transitive closure of the near-dup relation, one canonical
+keeper per cluster — pair (A,B) + pair (B,C) must retire both B and C, not
+just one of them. At 10^10 documents the closure cannot be driver-side
+union-find; this module implements the alternating large-star / small-star
+algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
+Components in MapReduce and Beyond", ACM SoCC 2014, public) as pure
+DataFrame joins and aggregates:
 
   - large-star: every node's strictly-larger neighbors re-point to the
     minimum of its closed neighborhood;

@@ -16,7 +16,7 @@ cardinality we control; per-group state never exceeds dim entries.
 
 The reference has no embedding surface; this is part of the training-data
 superset the north rule asks for (composes with operators/chunking.py
-upstream and similarity.py downstream).
+upstream).
 """
 
 from __future__ import annotations

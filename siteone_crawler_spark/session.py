@@ -34,6 +34,13 @@ def _ship_package(spark: SparkSession) -> None:
     setattr(spark, marker, True)
 
 
+def _driver_memory() -> str:
+    """24g, capped at half of physical memory: a heap cap above what the
+    machine has never makes G1 collect before the host runs short."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "siteone_crawler_spark",
     cores: int | None = None,
@@ -79,7 +86,7 @@ def get_spark(
         # heap under 32 allocating threads spent ~70% CPU in kernel page
         # zeroing (measured via vmstat sys%). 24g is plenty for the state
         # tables; raise via SPARK_DRIVER_MEM only for giant local joins.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_memory()))
         # fewer, larger Arrow batches: less per-batch object churn in the
         # pandas-UDF exchange (GC pressure scales with task concurrency)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")

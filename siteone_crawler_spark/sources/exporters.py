@@ -4,7 +4,7 @@ exporters (/root/reference/src/export/*).
   sitemap_rows / write_sitemap_xml  S8: sitemap_exporter.rs:45-120 — filter
       internal+HTML+200, sort (slash count, alpha), priority =
       clamp(base + inc*(1-extra_slashes), 0.1, 1.0)
-  json_summary / write_json         S11: output/json_output.rs:86-135 —
+  json_output / write_json          S11: output/json_output.rs:86-135 —
       results + stats + tables (docs/JSON-OUTPUT.md:50-105 schema spirit)
   markdown_spans                    S10: markdown_exporter.rs — the per-doc
       interleaved text+media sequence (the spans column IS this output;
@@ -72,13 +72,6 @@ def _xml_escape(s: str) -> str:
         s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
         .replace('"', "&quot;")
     )
-
-
-def json_summary(visited: DataFrame, skipped: DataFrame) -> dict:
-    """Back-compat thin shape (stats + tables); see json_output for the
-    full documented schema."""
-    out = json_output(visited, skipped)
-    return {"stats": out["stats"], "tables": out["tables"]}
 
 
 # Above this, a writer "limit" is effectively "emit everything": skip the

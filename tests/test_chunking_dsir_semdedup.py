@@ -1,5 +1,4 @@
-"""Targeted property tests for the round-5 training-pipeline additions:
-chunk_documents (operators/chunking.py), semdedup (operators/similarity.py),
+"""Targeted property tests for chunk_documents (operators/chunking.py) and
 dsir_weights (operators/dsir.py). Value parity vs the DuckDB oracles is
 certified separately by tests/test_entry_oracle.py."""
 
@@ -7,7 +6,6 @@ from pyspark.sql import functions as F
 
 from siteone_crawler_spark.operators.chunking import chunk_documents
 from siteone_crawler_spark.operators.dsir import dsir_weights, word_grams
-from siteone_crawler_spark.operators.similarity import semdedup
 
 
 # ------------------------------------------------------------- chunking
@@ -44,31 +42,6 @@ def test_chunk_empty_doc_emits_nothing(spark):
         _docs(spark, [(1, "   "), (2, ""), (3, "one")]), chunk_tokens=4, stride=4
     ).collect()
     assert {(r["doc_id"], r["chunk_text"]) for r in out} == {(3, "one")}
-
-
-# ------------------------------------------------------------- semdedup
-def _emb(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_semdedup_exact_dups_keep_lowest_id(spark):
-    v = [1.0, 0.0, 0.0, 0.0]
-    w = [0.0, 1.0, 0.0, 0.0]
-    emb = _emb(spark, [(0, v), (1, w), (2, v), (3, v), (4, w)])
-    out = {r["vec_id"]: r for r in semdedup(emb, threshold=0.99, n_centroids=2).collect()}
-    assert len(out) == 5  # every row present
-    # identical vectors cluster together; lowest id keeps, the rest drop
-    assert out[0]["keep"] and not out[2]["keep"] and not out[3]["keep"]
-    assert out[1]["keep"] and not out[4]["keep"]
-    # orthogonal groups land in different clusters
-    assert out[0]["cluster"] != out[1]["cluster"]
-
-
-def test_semdedup_max_cluster_guard_disables_pairing(spark):
-    v = [1.0, 0.0]
-    emb = _emb(spark, [(i, v) for i in range(6)])
-    out = semdedup(emb, threshold=0.99, n_centroids=1, max_cluster=1).collect()
-    assert all(r["keep"] for r in out)  # over-full cluster: no pair join
 
 
 # ------------------------------------------------------------- DSIR

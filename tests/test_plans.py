@@ -109,55 +109,6 @@ def test_hot_path_codegen_spans(spark):
     assert "Python" not in plan, plan
 
 
-def test_ivf_assign_no_shuffle_no_udf(spark):
-    """IVF assignment is centroid-literal arithmetic: pure project, no
-    Exchange, no Python/Arrow eval — the bucket column costs nothing extra
-    on a scan."""
-    from siteone_crawler_spark.operators.similarity import ivf_assign
-
-    emb = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.col("id") % (i + 2)).cast("float") for i in range(4)]).alias(
-            "embedding"
-        ),
-    )
-    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    plan = explain_str(ivf_assign(emb, cents), "simple")
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan and "Arrow" not in plan, plan
-
-
-def test_near_dup_paths_have_no_cartesian(spark):
-    """Every near-dup pair generator must stay an equi-join on block keys —
-    a CartesianProduct/BroadcastNestedLoop anywhere means the O(n^2) path
-    leaked back in."""
-    from siteone_crawler_spark.operators.dedup import (
-        near_duplicates_minhash,
-        simhash_near_pairs,
-    )
-    from siteone_crawler_spark.operators.similarity import embedding_near_dup_pairs
-
-    docs = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("alpha beta gamma delta epsilon zeta "), (F.col("id") % 5).cast("string")).alias("text"),
-    )
-    emb = spark.range(50).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.col("id") % (i + 2)).cast("float") for i in range(4)]).alias(
-            "embedding"
-        ),
-    )
-    for df in (
-        near_duplicates_minhash(docs, threshold=0.5, num_hashes=4, bands=2, max_bucket=1000),
-        near_duplicates_minhash(docs, threshold=0.5, num_hashes=4, bands=2, max_bucket=None),
-        simhash_near_pairs(docs, max_bucket=1000),
-        embedding_near_dup_pairs(emb, n_planes=4, max_bucket=1000),
-    ):
-        plan = explain_str(df, "simple")
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoop" not in plan, plan
-
-
 def test_content_analyzers_no_python_in_scan(spark):
     """The security/SEO/accessibility/best-practice analyzers must stay
     whole-stage-codegen'd — any ArrowEval/BatchEval node means a Python
@@ -231,21 +182,6 @@ def test_classifier_score_broadcasts_weights(spark):
     )
     scored = quality_lr_score(docs, deterministic_weights(spark, 1 << 10), dim=1 << 10)
     assert has_broadcast_join(scored)
-
-
-def test_repeated_windows_no_cartesian(spark):
-    """repeated_window_stats joins occurrences to hot hashes by key — no
-    cartesian/nested-loop anywhere (the corpus-squared failure mode)."""
-    from siteone_crawler_spark.operators.dedup import repeated_window_stats
-
-    docs = spark.range(60).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("alpha beta gamma delta epsilon zeta eta theta doc "),
-                 F.col("id").cast("string")).alias("text"),
-    )
-    plan = explain_str(repeated_window_stats(docs, window=3), "simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_split_assign_is_scan_side_projection(spark):
