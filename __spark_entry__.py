@@ -5,12 +5,12 @@ wave expansion with real canonicalize/dedup/rank operators) over a docs table
 derived deterministically from /root/testdata/sf0.001/documents.parquet.
 
 `queries()` exposes one entry per implemented operator family from
-SURVEY.md §2, plus the training-data operators not yet cut (exact dedup,
-sampling, chunking, dsir, bpe, pooling, classifier, pii, functions/text.py)
-and SQL-only twins, each with a DuckDB `oracle_sql()` twin. Column names and
-values are aligned across engines: float aggregations go through decimal
-casts (order-independent exactness) and computed floats are rounded
-identically on both sides.
+SURVEY.md §2, plus the training-data operators not yet cut (sampling, pii,
+chunking, dsir, bpe, classifier, functions/text.py); every entry runs
+package code. `oracle_sql()` holds its DuckDB twin over the same
+`documents` table. Column names and values are aligned across engines:
+float aggregations go through decimal casts (order-independent exactness)
+and computed floats are rounded identically on both sides.
 """
 
 from __future__ import annotations
@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = ("documents",)
 
 
 def _register(spark: SparkSession, sf_dir: str) -> None:
@@ -87,66 +85,11 @@ WITH urls AS (
 )
 """
 
-# normalized-token expression, per dialect
-_TOKS_SPARK = "filter(split(regexp_replace(lower(text), '[^a-z0-9]+', ' '), ' '), x -> x <> '')"
+# DuckDB normalized-token expression (functions/text.norm_tokens' twin)
 _TOKS_DUCK = (
     "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),"
     " x -> x <> '')"
 )
-
-_STOP = {
-    "en": "'the','a','of','and','to','in','is','it','that','for'",
-    "es": "'el','la','de','y','que','en','los','se','del','las'",
-    "fr": "'le','la','de','et','les','des','en','un','du','une'",
-    "zh": "'de5','shi4','zai4','le5','he2','you3','wo3','ta1','zhe4','men5'",
-}
-
-
-def _hits(toks: str, lang: str, dialect: str) -> str:
-    fn = "filter" if dialect == "spark" else "list_filter"
-    sz = "size" if dialect == "spark" else "len"
-    return f"{sz}({fn}({toks}, x -> x IN ({_STOP[lang]})))"
-
-
-def _quality_sql(dialect: str, toks: str | None = None) -> str:
-    """`toks` overrides the token expression — the Spark queries bind the
-    token array ONCE in a subquery column (Catalyst skips subexpression
-    elimination for lambda-bearing expressions, so the default inline form
-    re-tokenizes per textual reference); the DuckDB oracle text keeps the
-    inline default and is byte-identical to previous rounds."""
-    toks = toks or (_TOKS_SPARK if dialect == "spark" else _TOKS_DUCK)
-    sz = "size" if dialect == "spark" else "len"
-    g = ", 'g'" if dialect == "duck" else ""
-    n_tok = f"{sz}({toks})"
-    hits = _hits(toks, "en", dialect)
-    punct = f"(length(regexp_replace(text, '[a-zA-Z0-9 ]', ''{g})) * 1.0 / length(text))"
-    len_score = f"least({n_tok} / 100.0, 1.0)"
-    sw_score = f"least((CASE WHEN {n_tok} > 0 THEN {hits} * 1.0 / {n_tok} ELSE 0.0 END) * 5.0, 1.0)"
-    punct_pen = f"greatest(0.0, 1.0 - (CASE WHEN length(text) > 0 THEN {punct} ELSE 0.0 END) * 4.0)"
-    return f"round(0.4 * {len_score} + 0.3 * {sw_score} + 0.3 * {punct_pen}, 6)"
-
-
-def _lang_sql(dialect: str, h: dict[str, str] | None = None) -> str:
-    """`h` overrides the per-language hit-count expressions — the Spark
-    query binds them as subquery columns (each is referenced up to 4x in
-    the CASE); the DuckDB oracle text keeps the inline default."""
-    if h is None:
-        toks = _TOKS_SPARK if dialect == "spark" else _TOKS_DUCK
-        h = {lang: _hits(toks, lang, dialect) for lang in _STOP}
-    return (
-        "CASE "
-        f"WHEN {h['en']} >= {h['es']} AND {h['en']} >= {h['fr']} AND {h['en']} >= {h['zh']} AND {h['en']} > 0 THEN 'en' "
-        f"WHEN {h['es']} >= {h['fr']} AND {h['es']} >= {h['zh']} AND {h['es']} > 0 THEN 'es' "
-        f"WHEN {h['fr']} >= {h['zh']} AND {h['fr']} > 0 THEN 'fr' "
-        f"WHEN {h['zh']} > 0 THEN 'zh' "
-        "ELSE 'und' END"
-    )
-
-
-def _fp_sql(dialect: str) -> str:
-    if dialect == "spark":
-        return f"md5(array_join({_TOKS_SPARK}, ' '))"
-    return f"md5(array_to_string({_TOKS_DUCK}, ' '))"
 
 
 def _shingles_sql(n: int) -> str:
@@ -238,15 +181,8 @@ WITH d0 AS (
 
 
 # ----------------------------------------------------------------- queries
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def sqlq(sql: str):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _register(spark, sf_dir)
-            return spark.sql(sql)
-
-        return run
 
     # ---- crawl-semantic operators (F1-F2, J1, W5, P5) over derived URLs ----
     def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,14 +242,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["seen_antijoin"] = q_seen_antijoin
 
-    q["frontier_rank"] = sqlq(
-        _URLS_CTE
-        + """
-        SELECT row_number() OVER (ORDER BY variant, doc_id) - 1 AS seq,
-               canon_expected AS canon_url
-        FROM raw"""
-    )
-
     def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         """P5/F11: the robots wildcard matcher UDF over broadcast rules."""
         from siteone_crawler_spark.functions.robots import compile_rules_map, is_allowed
@@ -343,151 +271,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["robots_gate"] = q_robots_gate
 
-    # ---- analyzer aggregations (§2.4) on driver testdata --------------------
-    q["tpch_q1"] = sqlq(
-        """
-        SELECT l_returnflag, l_linestatus,
-          cast(sum(cast(l_quantity AS decimal(18,6))) AS double) AS sum_qty,
-          cast(sum(cast(l_extendedprice AS decimal(18,6))) AS double) AS sum_base,
-          cast(sum(cast(l_extendedprice * (1 - l_discount) AS decimal(18,6))) AS double) AS sum_disc,
-          round(cast(sum(cast(l_quantity AS decimal(18,6))) AS double) / count(*), 6) AS avg_qty,
-          count(*) AS n
-        FROM lineitem
-        WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus"""
-    )
-
-    q["basic_stats"] = sqlq(
-        """
-        SELECT count(*) AS total_events,
-          cast(sum(cast(value AS decimal(20,8))) AS double) AS total_value,
-          round(cast(sum(cast(value AS decimal(20,8))) AS double) / count(*), 6) AS avg_value,
-          cast(min(value) AS double) AS min_value,
-          cast(max(value) AS double) AS max_value,
-          count(DISTINCT user_id) AS n_users
-        FROM events"""
-    )
-
-    q["count_by_status"] = sqlq(
-        "SELECT o_orderstatus AS status, count(*) AS n FROM orders GROUP BY o_orderstatus"
-    )
-
-    q["content_type_stats"] = sqlq(
-        """
-        SELECT lang,
-          count(*) AS n,
-          sum(n_chars) AS total_chars,
-          round(cast(sum(cast(n_chars AS decimal(18,4))) AS double) / count(*), 6) AS avg_chars
-        FROM documents GROUP BY lang"""
-    )
-
-    q["source_domain_stats"] = sqlq(
-        """
-        SELECT source, lang, count(*) AS n, sum(n_chars) AS total_chars
-        FROM documents GROUP BY source, lang"""
-    )
-
-    q["top_slowest"] = sqlq(
-        """
-        SELECT event_id, cast(value AS double) AS value FROM events
-        ORDER BY value DESC, event_id ASC LIMIT 20"""
-    )
-
-    q["top_fastest"] = sqlq(
-        """
-        SELECT event_id, cast(value AS double) AS value FROM events
-        ORDER BY value ASC, event_id ASC LIMIT 20"""
-    )
-
-    q["duplicate_titles"] = sqlq(
-        """
-        SELECT substr(text, 1, 25) AS title, count(*) AS n, min(doc_id) AS first_doc
-        FROM documents GROUP BY substr(text, 1, 25) HAVING count(*) > 1"""
-    )
-
-    q["headers_stats"] = sqlq(
-        """
-        SELECT event_type,
-          count(*) AS n,
-          count(DISTINCT user_id) AS n_users,
-          min(cast(get_json_object(props, '$.k') AS int)) AS min_k,
-          max(cast(get_json_object(props, '$.k') AS int)) AS max_k
-        FROM events GROUP BY event_type"""
-    )
-
-    q["window_rank"] = sqlq(
-        """
-        SELECT user_id, event_id, rn FROM (
-          SELECT user_id, event_id,
-                 row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-          FROM events) t
-        WHERE rn <= 3"""
-    )
-
-    q["sessionize"] = sqlq(
-        """
-        WITH g AS (
-          SELECT user_id, ts,
-            CASE WHEN unix_timestamp(ts) - unix_timestamp(
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-            THEN 1 ELSE 0 END AS new_session
-          FROM events)
-        SELECT user_id, sum(new_session) AS n_sessions, count(*) AS n_events
-        FROM g GROUP BY user_id"""
-    )
-
-    q["windowed_counts"] = sqlq(
-        """
-        SELECT cast(date_trunc('hour', ts) AS string) AS hour_bucket,
-               event_type, count(*) AS n
-        FROM events GROUP BY date_trunc('hour', ts), event_type"""
-    )
-
     # ---- training-data operators -------------------------------------------
-    def q_dedup_exact(spark, sf_dir):
-        from siteone_crawler_spark.operators.dedup import exact_duplicates
-
-        _register(spark, sf_dir)
-        return exact_duplicates(spark.table("documents")).select("fp", "n_docs", "keeper")
-
-    q["dedup_exact"] = q_dedup_exact
-
-    q["token_count"] = sqlq(
-        f"""
-        SELECT lang, sum(size({_TOKS_SPARK})) AS total_tokens,
-               count(*) AS n_docs
-        FROM documents GROUP BY lang"""
-    )
-
-    # Spark side binds the token array (and for lang_id the per-language hit
-    # counts) as subquery columns so the lambda-bearing tokenization runs
-    # ONCE per row instead of once per textual reference (Catalyst skips
-    # subexpression elimination for higher-order-function expressions). The
-    # computed VALUES are expression-for-expression identical to the inline
-    # form the DuckDB oracle still uses.
-    q["quality_score"] = sqlq(
-        f"""
-        SELECT source,
-          round(cast(sum(cast({_quality_sql('spark', toks='__toks')} AS decimal(18,8))) AS double) / count(*), 6) AS avg_quality,
-          count(*) AS n
-        FROM (SELECT source, text, {_TOKS_SPARK} AS __toks FROM documents) __q
-        GROUP BY source"""
-    )
-
-    _hit_cols = {lang: f"__h_{lang}" for lang in _STOP}
-    q["lang_id"] = sqlq(
-        f"""
-        SELECT doc_id, {_lang_sql('spark', h=_hit_cols)} AS lang_guess, lang AS lang_actual
-        FROM (SELECT doc_id, lang,
-                {', '.join(f"{_hits('__toks', lang, 'spark')} AS __h_{lang}" for lang in _STOP)}
-              FROM (SELECT doc_id, lang, {_TOKS_SPARK} AS __toks FROM documents) __t0) __t1"""
-    )
-
-    q["doc_fingerprint"] = sqlq(
-        f"SELECT doc_id, {_fp_sql('spark')} AS fp FROM documents"
-    )
-
     def q_hash_sample(spark, sf_dir):
         from siteone_crawler_spark.operators.sampling import hash_sample
 
@@ -559,42 +343,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return bpe_pair_stats(spark.table("documents"), min_count=2)
 
     q["bpe_pair_stats"] = q_bpe_pair_stats
-
-    def q_mean_pool(spark, sf_dir):
-        """Element-wise mean pooling of embeddings per group
-        (operators/pooling.mean_pool): posexplode -> per-(group,dim) avg
-        (map-side combine, constant per-key state) -> dim-bounded refold;
-        never collect_list of whole vectors."""
-        from pyspark.sql import functions as F
-
-        _register(spark, sf_dir)
-        from siteone_crawler_spark.operators.pooling import mean_pool
-
-        emb = spark.table("embeddings").select(
-            (F.col("vec_id") % 50).alias("group_id"), "embedding"
-        )
-        return mean_pool(emb, group_col="group_id")
-
-    q["mean_pool"] = q_mean_pool
-
-    def q_gumbel_topk(spark, sf_dir):
-        """Gumbel-top-k weighted sample without replacement
-        (operators/sampling.gumbel_topk_sample): content-addressed Gumbel
-        noise + global TakeOrderedAndProject top-k — weight here is
-        ln(n_chars+1); with dsir_weight it is the DSIR resample step."""
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.sampling import gumbel_topk_sample
-
-        _register(spark, sf_dir)
-        docs = spark.table("documents").select(
-            "doc_id", F.log(F.col("n_chars") + 1.0).alias("w")
-        )
-        return gumbel_topk_sample(docs, key="doc_id", weight_col="w", k=50).select(
-            "doc_id", "gumbel_score"
-        )
-
-    q["gumbel_topk"] = q_gumbel_topk
 
     def _pii_augmented(spark, sf_dir):
         # the synthetic corpus has no digits, so both sides plant the SAME
@@ -762,58 +510,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["subword_token_count"] = q_subword_tokens
-
-    # ---- set ops / grouping sets / semi-joins / ordering sinks ------------
-    q["sitemap_order"] = sqlq(
-        _URLS_CTE
-        + """
-        SELECT canon_expected AS url,
-               length(canon_expected) - length(replace(canon_expected, '/', '')) AS slashes,
-               cast(round(greatest(0.1, least(1.0, 1.0 - 0.1 *
-                 (length(canon_expected) - length(replace(canon_expected, '/', '')) - 3))), 2)
-                 AS double) AS priority
-        FROM raw WHERE variant <> 1
-        ORDER BY slashes ASC, url ASC"""
-    )
-
-    q["union_distinct"] = sqlq(
-        """
-        SELECT doc_id FROM documents WHERE doc_id % 3 = 0
-        UNION
-        SELECT doc_id FROM documents WHERE doc_id % 5 = 0"""
-    )
-
-    q["semi_join_exists"] = sqlq(
-        """
-        SELECT o_orderkey, o_totalprice FROM orders o
-        WHERE EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)"""
-    )
-
-    q["cube_stats"] = sqlq(
-        """
-        SELECT coalesce(lang, 'ALL') AS lang, coalesce(source, 'ALL') AS source,
-               count(*) AS n, sum(n_chars) AS total_chars
-        FROM documents
-        GROUP BY CUBE (lang, source)"""
-    )
-
-    q["existence_flags"] = sqlq(
-        """
-        SELECT max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS has_purchase,
-               max(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS has_error,
-               max(CASE WHEN value > 1000000 THEN 1 ELSE 0 END) AS has_huge_value
-        FROM events"""
-    )
-
-    q["join_agg_enrich"] = sqlq(
-        """
-        SELECT n.n_name AS nation, count(*) AS n_customers,
-          cast(sum(cast(c.c_acctbal AS decimal(18,4))) AS double) AS total_balance
-        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-        GROUP BY n.n_name"""
-    )
 
     def q_span_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
         """North-rule per-row invariant: span-sequence (kind,text,media_ref,
@@ -1272,78 +968,11 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dns_stats_resolve"] = q_dns_resolve
 
-    head = {k: v for k, v in q.items() if k not in _NOT_DRIVER_CHECKED}
-    head.update({k: q[k] for k in _NOT_DRIVER_CHECKED if k in q})
-    return head
-
-
-# Generic Spark-vs-DuckDB dialect twins (they certify SQL dialects, not repo
-# operators) and superseded proxies (duplicate_titles ->
-# duplicate_titles_meta, headers_stats -> header_stats_map). NOT part of the
-# driver contract — every driver-checked queries() entry certifies a repo
-# operator, so defined == checked — but still runnable: extra_queries() /
-# extra_oracle_sql() keep them under the local pytest oracle gate
-# (tests/test_entry_oracle.py) and the bench.
-_DIALECT_TWINS = (
-    "duplicate_titles",
-    "headers_stats",
-    "tpch_q1",
-    "window_rank",
-    "sessionize",
-    "windowed_counts",
-    "union_distinct",
-    "semi_join_exists",
-    "cube_stats",
-    "existence_flags",
-    "join_agg_enrich",
-)
-
-# Redundant presentation variants demoted to make room in the 50-row driver
-# gate for the first-class training operators (hash_sample,
-# stratified_sample, repetition_ratio, pii_scan, pii_redact): each demoted row is a projection or source-table twin
-# of a still-gated row (count_by_status ⊂ basic_stats; visited_top_slowest
-# = top_slowest over the visited subset; caching_stats_domain_ct = the two
-# gated caching_stats_* variants crossed; visited_content_type_stats /
-# visited_source_domain_stats / visited_basic_stats = content_type_stats /
-# source_domain_stats / basic_stats over the visited subset). Still
-# value-certified every run by the local pytest oracle gate
-# (tests/test_entry_oracle.py).
-_PYTEST_ONLY = (
-    "count_by_status",
-    "visited_top_slowest",
-    "caching_stats_domain_ct",
-    "visited_content_type_stats",
-    "visited_source_domain_stats",
-    "visited_basic_stats",
-    # post-width training ops (the gate already holds the first-class
-    # training rows); full DuckDB oracles run in the pytest gate
-    "temperature_sample",
-    "pack_sequences",
-    "classifier_score",
-    "gopher_quality",
-    "split_assign",
-    "chunk_documents",
-    "dsir_weights",
-    "bpe_pair_stats",
-    "mean_pool",
-    "gumbel_topk",
-)
-
-_NOT_DRIVER_CHECKED = _DIALECT_TWINS + _PYTEST_ONLY
-
-
-def queries() -> dict:
-    all_q = _all_queries()
-    return {k: v for k, v in all_q.items() if k not in _NOT_DRIVER_CHECKED}
-
-
-def extra_queries() -> dict:
-    all_q = _all_queries()
-    return {k: all_q[k] for k in _NOT_DRIVER_CHECKED if k in all_q}
+    return q
 
 
 # -------------------------------------------------------------- oracle SQL
-def _all_oracle_sql() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
 
     o["url_canonicalize"] = (
@@ -1372,14 +1001,6 @@ def _all_oracle_sql() -> dict[str, str]:
           WHERE r2.doc_id % 2 = 0 AND r2.canon_expected = r1.canon_expected)"""
     )
 
-    o["frontier_rank"] = (
-        _URLS_CTE
-        + """
-        SELECT row_number() OVER (ORDER BY variant, doc_id) - 1 AS seq,
-               canon_expected AS canon_url
-        FROM raw"""
-    )
-
     o["robots_gate"] = """
         SELECT cast(doc_id AS bigint) AS doc_id,
           CASE cast(doc_id % 5 AS int)
@@ -1389,101 +1010,6 @@ def _all_oracle_sql() -> dict[str, str]:
           END AS path,
           (doc_id % 5) <> 0 AS allowed
         FROM documents"""
-
-    o["tpch_q1"] = """
-        SELECT l_returnflag, l_linestatus,
-          cast(sum(cast(l_quantity AS decimal(18,6))) AS double) AS sum_qty,
-          cast(sum(cast(l_extendedprice AS decimal(18,6))) AS double) AS sum_base,
-          cast(sum(cast(l_extendedprice * (1 - l_discount) AS decimal(18,6))) AS double) AS sum_disc,
-          round(cast(sum(cast(l_quantity AS decimal(18,6))) AS double) / count(*), 6) AS avg_qty,
-          count(*) AS n
-        FROM lineitem
-        WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus"""
-
-    o["basic_stats"] = """
-        SELECT count(*) AS total_events,
-          cast(sum(cast(value AS decimal(20,8))) AS double) AS total_value,
-          round(cast(sum(cast(value AS decimal(20,8))) AS double) / count(*), 6) AS avg_value,
-          cast(min(value) AS double) AS min_value,
-          cast(max(value) AS double) AS max_value,
-          count(DISTINCT user_id) AS n_users
-        FROM events"""
-
-    o["count_by_status"] = (
-        "SELECT o_orderstatus AS status, count(*) AS n FROM orders GROUP BY o_orderstatus"
-    )
-
-    o["content_type_stats"] = """
-        SELECT lang, count(*) AS n, cast(sum(n_chars) AS bigint) AS total_chars,
-          round(cast(sum(cast(n_chars AS decimal(18,4))) AS double) / count(*), 6) AS avg_chars
-        FROM documents GROUP BY lang"""
-
-    o["source_domain_stats"] = """
-        SELECT source, lang, count(*) AS n, cast(sum(n_chars) AS bigint) AS total_chars
-        FROM documents GROUP BY source, lang"""
-
-    o["top_slowest"] = """
-        SELECT event_id, cast(value AS double) AS value FROM events
-        ORDER BY value DESC, event_id ASC LIMIT 20"""
-
-    o["top_fastest"] = """
-        SELECT event_id, cast(value AS double) AS value FROM events
-        ORDER BY value ASC, event_id ASC LIMIT 20"""
-
-    o["duplicate_titles"] = """
-        SELECT substr(text, 1, 25) AS title, count(*) AS n, min(doc_id) AS first_doc
-        FROM documents GROUP BY substr(text, 1, 25) HAVING count(*) > 1"""
-
-    o["headers_stats"] = """
-        SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS n_users,
-          min(cast(json_extract_string(props, '$.k') AS int)) AS min_k,
-          max(cast(json_extract_string(props, '$.k') AS int)) AS max_k
-        FROM events GROUP BY event_type"""
-
-    o["window_rank"] = """
-        SELECT user_id, event_id, rn FROM (
-          SELECT user_id, event_id,
-                 row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-          FROM events) t
-        WHERE rn <= 3"""
-
-    o["sessionize"] = """
-        WITH g AS (
-          SELECT user_id, ts,
-            CASE WHEN epoch(ts) - epoch(
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-            THEN 1 ELSE 0 END AS new_session
-          FROM events)
-        SELECT user_id, cast(sum(new_session) AS bigint) AS n_sessions, count(*) AS n_events
-        FROM g GROUP BY user_id"""
-
-    o["windowed_counts"] = """
-        SELECT cast(date_trunc('hour', ts) AS string) AS hour_bucket,
-               event_type, count(*) AS n
-        FROM events GROUP BY date_trunc('hour', ts), event_type"""
-
-    o["dedup_exact"] = f"""
-        SELECT {_fp_sql('duck')} AS fp, count(*) AS n_docs, min(doc_id) AS keeper
-        FROM documents GROUP BY {_fp_sql('duck')}"""
-
-    o["token_count"] = f"""
-        SELECT lang, cast(sum(len({_TOKS_DUCK})) AS bigint) AS total_tokens,
-          count(*) AS n_docs
-        FROM documents GROUP BY lang"""
-
-    o["quality_score"] = f"""
-        SELECT source,
-          round(cast(sum(cast({_quality_sql('duck')} AS decimal(18,8))) AS double) / count(*), 6) AS avg_quality,
-          count(*) AS n
-        FROM documents GROUP BY source"""
-
-    o["lang_id"] = f"""
-        SELECT doc_id, {_lang_sql('duck')} AS lang_guess, lang AS lang_actual
-        FROM documents"""
-
-    o["doc_fingerprint"] = f"SELECT doc_id, {_fp_sql('duck')} AS fp FROM documents"
 
     # rate=0.2, salt='s1': threshold hex = format(int(0.2 * 65536), '04x')
     # = '3333'; lowercase-hex string order == numeric order, so the literal
@@ -1566,32 +1092,6 @@ def _all_oracle_sql() -> dict[str, str]:
               WHERE length(w) >= 2)
         SELECT lhs, rhs, CAST(sum(wc) AS bigint) AS pair_count
         FROM p GROUP BY lhs, rhs HAVING sum(wc) >= 2"""
-
-    # mean pooling (operators/pooling.py): per-dimension avg per group
-    # (vec_id % 50), list rebuilt in dimension order, avg rounded 6
-    o["mean_pool"] = """
-        WITH v AS (SELECT vec_id % 50 AS group_id, embedding
-                   FROM embeddings
-                   WHERE embedding IS NOT NULL AND len(embedding) > 0),
-        e AS (SELECT group_id, i, embedding[i] AS x
-              FROM v, unnest(generate_series(1, len(embedding))) AS t(i)),
-        m AS (SELECT group_id, i, round(avg(x), 6) AS m, count(*) AS n
-              FROM e GROUP BY group_id, i)
-        SELECT group_id, list(m ORDER BY i) AS pooled,
-          CAST(max(n) AS int) AS n_vectors
-        FROM m GROUP BY group_id"""
-
-    # Gumbel-top-k sample (operators/sampling.gumbel_topk_sample, k=50,
-    # weight = ln(n_chars+1)): u = (md5_32(key)+0.5)/2^32, noise
-    # -ln(-ln(u)); selection on the raw score, output rounded 6
-    o["gumbel_topk"] = """
-        WITH s AS (SELECT doc_id,
-            ln(n_chars + 1.0)
-              - ln(-ln((('0x' || substring(md5(doc_id::VARCHAR), 1, 8))::UBIGINT
-                        + 0.5) / 4294967296.0)) AS sc
-          FROM documents)
-        SELECT doc_id, round(sc, 6) AS gumbel_score
-        FROM s ORDER BY sc DESC, doc_id LIMIT 50"""
 
     # PII scan/redact: same deterministic augmentation as the Spark side
     # (operators/pii.py patterns interpolated verbatim — one source of
@@ -1745,47 +1245,6 @@ def _all_oracle_sql() -> dict[str, str]:
                          < '3333' THEN 'test'
                     ELSE 'train' END AS split
         FROM documents"""
-
-    o["sitemap_order"] = (
-        _URLS_CTE
-        + """
-        SELECT canon_expected AS url,
-               length(canon_expected) - length(replace(canon_expected, '/', '')) AS slashes,
-               cast(round(greatest(0.1, least(1.0, 1.0 - 0.1 *
-                 (length(canon_expected) - length(replace(canon_expected, '/', '')) - 3))), 2)
-                 AS double) AS priority
-        FROM raw WHERE variant <> 1
-        ORDER BY slashes ASC, url ASC"""
-    )
-
-    o["union_distinct"] = """
-        SELECT doc_id FROM documents WHERE doc_id % 3 = 0
-        UNION
-        SELECT doc_id FROM documents WHERE doc_id % 5 = 0"""
-
-    o["semi_join_exists"] = """
-        SELECT o_orderkey, o_totalprice FROM orders o
-        WHERE EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)"""
-
-    o["cube_stats"] = """
-        SELECT coalesce(lang, 'ALL') AS lang, coalesce(source, 'ALL') AS source,
-               count(*) AS n, cast(sum(n_chars) AS bigint) AS total_chars
-        FROM documents
-        GROUP BY CUBE (lang, source)"""
-
-    o["existence_flags"] = """
-        SELECT max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS has_purchase,
-               max(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS has_error,
-               max(CASE WHEN value > 1000000 THEN 1 ELSE 0 END) AS has_huge_value
-        FROM events"""
-
-    o["join_agg_enrich"] = """
-        SELECT n.n_name AS nation, count(*) AS n_customers,
-          cast(sum(cast(c.c_acctbal AS decimal(18,4))) AS double) AS total_balance
-        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-        GROUP BY n.n_name"""
 
     # span-sequence invariant: reproduce the derived spans + md5 fingerprint
     # (SEP = chr(31), struct fields joined kind|text|media_ref in offset order)
@@ -2228,11 +1687,3 @@ def _all_oracle_sql() -> dict[str, str]:
         ORDER BY header"""
 
     return o
-
-
-def oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items() if k not in _NOT_DRIVER_CHECKED}
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items() if k in _NOT_DRIVER_CHECKED}

@@ -9,10 +9,12 @@ analyzer/exporter queries expressed as plain DataFrame aggregations.
 
 Package layout:
   functions/   vectorized scalar kernels (URL canonicalize, robots match,
-               cache headers, text analysis)
+               cache headers, extra columns) and the text kernels not yet
+               cut (functions/text.py)
   sources/     docs/seed readers + the checkpointed table contract
   operators/   frontier ordering, seen-set anti-join, SiteOne analyzers
-               and reports, plus training-data operators not yet cut
+               and reports, plus the training-data operators not yet cut
+               (components, sampling, chunking, dsir, bpe, classifier, pii)
   plans/       explain/inspection helpers
   streaming/   wave-as-microbatch driver helpers
   engine.py    the iterative wave driver with checkpoint/resume

@@ -31,10 +31,10 @@ the unique compound key (parent_seq, span_offset) and assigning a cumulative
 global `seq`. At workers=1 the reference's order is exactly this (BASELINE.md
 note); tests/test_frontier_parity.py asserts equality against the simulator.
 
-Scale notes (local[32] here, 1000 executors in spirit):
-  - no driver-side row loops: per-row logic lives in two Arrow-batched UDFs
-    (resolve, robots) and one narrow applyInPandas (breaker, only over
-    at-risk basename groups);
+Scale notes (local[N] in tests and perfbench, 1000 executors in spirit):
+  - no driver-side row loops: per-row logic lives in one Arrow-batched UDF
+    (resolve, which also evaluates robots in the same batch) and one narrow
+    applyInPandas (breaker, only over at-risk basename groups);
   - the wave rank avoids a single-partition window (operators/ordering.py);
   - seen-set dedup is Bloom-prefiltered above SeenSet.bloom_min_keys keys
     by a broadcast join on word-blocked filter rows (no Python), so only

@@ -5,7 +5,6 @@ codegen) — no Python in the hot path — and each has a DuckDB-SQL-expressible
 twin so the driver's oracle can verify values bit-for-bit:
 
   - tokenization + token counts (whitespace + alnum-normalized)
-  - document fingerprinting (md5 of the normalized token stream)
   - a BPE-style subword token estimate
   - duplicate n-gram fraction and the Gopher quality rules
 
@@ -41,12 +40,6 @@ def _let(value, body) -> Column:
 
 def token_count(col) -> Column:
     return F.size(norm_tokens(col))
-
-
-def fingerprint(col) -> Column:
-    """Normalized-content fingerprint: md5 over the space-joined token stream
-    (whitespace/punct/case-insensitive duplicate detector)."""
-    return F.md5(F.concat_ws(" ", norm_tokens(col)))
 
 
 # GPT-2-style pre-tokenizer (public pattern family): contractions, an

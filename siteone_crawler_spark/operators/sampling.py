@@ -24,9 +24,6 @@ this module is part of the training-data superset the north rule asks for.
 
 from __future__ import annotations
 
-# gumbel_topk_sample added r5: completes the DSIR pipeline (weights from
-# operators/dsir.py -> weighted sample without replacement here)
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -231,47 +228,3 @@ def split_assign(
         expr = F.when(h < F.lit(thr), F.lit(lab)).otherwise(expr)
     return df.withColumn(col_name, expr)
 
-
-def gumbel_topk_sample(
-    df: DataFrame,
-    key: str,
-    weight_col: str,
-    k: int,
-    salt: str = "",
-    score_col: str = "gumbel_score",
-) -> DataFrame:
-    """Weighted sample WITHOUT replacement, deterministic: the k rows with
-    the largest weight + Gumbel(key) perturbation — the Gumbel-top-k trick
-    (public method: Kool et al. 2019, arXiv:1903.06059; it is also the
-    resampling step of DSIR, so this composes with operators/dsir.py:
-    pass dsir_weight as `weight_col`). `weight_col` must be a LOG weight;
-    selection probability is then proportional to exp(weight).
-
-    Content-addressed like hash_sample: the Gumbel noise is
-    -ln(-ln(u)) with u = (md5_32(key||salt) + 0.5) / 2^32 in (0,1) — the
-    same row gets the same noise across reruns, engines and
-    repartitionings; vary `salt` to redraw.
-
-    Scale shape: a scan-side projection plus ONE global top-k, which Spark
-    executes as TakeOrderedAndProject — each partition keeps k rows, the
-    driver merges P*k, no full sort and no shuffle of the corpus.
-    Returns the selected rows (all input columns + rounded score),
-    deterministic tie-break by key."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    h32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(key).cast("string"), F.lit(salt))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (h32 + F.lit(0.5)) / F.lit(float(2**32))
-    score = F.col(weight_col) + (-F.log(-F.log(u)))
-    return (
-        df.withColumn("__s", score)
-        .orderBy(F.desc("__s"), F.asc(key))
-        .limit(k)
-        .withColumn(score_col, F.round(F.col("__s"), 6))
-        .drop("__s")
-    )
