@@ -5,8 +5,8 @@ wave expansion with real canonicalize/dedup/rank operators) over a docs table
 derived deterministically from /root/testdata/sf0.001/documents.parquet.
 
 `queries()` exposes one entry per implemented operator family from
-SURVEY.md §2, plus the training-data operators not yet cut (sampling, pii,
-chunking, dsir, bpe, classifier, functions/text.py); every entry runs
+SURVEY.md §2, plus the training-data operators not yet cut (chunking,
+dsir, bpe, classifier, functions/text.py); every entry runs
 package code. `oracle_sql()` holds its DuckDB twin over the same
 `documents` table. Column names and values are aligned across engines:
 float aggregations go through decimal casts (order-independent exactness)
@@ -272,26 +272,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["robots_gate"] = q_robots_gate
 
     # ---- training-data operators -------------------------------------------
-    def q_hash_sample(spark, sf_dir):
-        from siteone_crawler_spark.operators.sampling import hash_sample
-
-        _register(spark, sf_dir)
-        return hash_sample(
-            spark.table("documents"), "doc_id", rate=0.2, salt="s1"
-        ).select("doc_id", "lang")
-
-    q["hash_sample"] = q_hash_sample
-
-    def q_stratified_sample(spark, sf_dir):
-        from siteone_crawler_spark.operators.sampling import stratified_sample
-
-        _register(spark, sf_dir)
-        return stratified_sample(
-            spark.table("documents"), strata="lang", key="doc_id", n_per_stratum=25
-        ).select("lang", "doc_id", "rn")
-
-    q["stratified_sample"] = q_stratified_sample
-
     def q_repetition_ratio(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -343,81 +323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return bpe_pair_stats(spark.table("documents"), min_count=2)
 
     q["bpe_pair_stats"] = q_bpe_pair_stats
-
-    def _pii_augmented(spark, sf_dir):
-        # the synthetic corpus has no digits, so both sides plant the SAME
-        # deterministic PII from doc_id — the oracle check then certifies
-        # regex-dialect parity (Java vs RE2) on real matches, not on an
-        # all-zero column
-        from pyspark.sql import functions as F
-
-        _register(spark, sf_dir)
-        return spark.table("documents").select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.when(
-                    F.col("doc_id") % 7 == 0,
-                    F.concat(
-                        F.lit(" contact user"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("@example.com now"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.when(F.col("doc_id") % 11 == 0,
-                       F.lit(" call 555-123-4567 or 10.0.0.1")).otherwise(F.lit("")),
-                F.when(F.col("doc_id") % 13 == 0,
-                       F.lit(" ssn 123-45-6789 card 4111-1111-1111-1111")
-                       ).otherwise(F.lit("")),
-            ).alias("text"),
-        )
-
-    def q_pii_scan(spark, sf_dir):
-        from siteone_crawler_spark.operators.pii import pii_scan
-
-        return pii_scan(_pii_augmented(spark, sf_dir)).select(
-            "doc_id", "n_email", "n_cc", "n_ssn", "n_phone", "n_ipv4",
-            "pii_total",
-        )
-
-    q["pii_scan"] = q_pii_scan
-
-    def q_pii_redact(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.pii import pii_redact
-
-        return pii_redact(_pii_augmented(spark, sf_dir)).select(
-            "doc_id", F.md5("redacted").alias("redacted_md5")
-        )
-
-    q["pii_redact"] = q_pii_redact
-
-    def q_temperature_sample(spark, sf_dir):
-        from siteone_crawler_spark.operators.sampling import temperature_sample
-
-        _register(spark, sf_dir)
-        return temperature_sample(
-            spark.table("documents"), strata="source", key="doc_id",
-            alpha=0.5, target_fraction=0.25, salt="ts1",
-        ).select("doc_id", "source")
-
-    q["temperature_sample"] = q_temperature_sample
-
-    def q_pack_sequences(spark, sf_dir):
-        # doc_id%16 shards (SQL-trivial) instead of the default xxhash64
-        # sharding, so the oracle reproduces placement exactly
-        from pyspark.sql import functions as F
-
-        from siteone_crawler_spark.operators.sampling import pack_sequences
-
-        _register(spark, sf_dir)
-        return pack_sequences(
-            spark.table("documents"), seq_len=256,
-            shard_col=F.pmod(F.col("doc_id"), F.lit(16)),
-        )
-
-    q["pack_sequences"] = q_pack_sequences
 
     def q_classifier_score(spark, sf_dir):
         """Model-based quality scores: pure-Catalyst LR inference with the
@@ -475,22 +380,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["gopher_quality"] = q_gopher_quality
-
-    def q_split_assign(spark, sf_dir):
-        """Deterministic 80/10/10 train/val/test assignment (operators/
-        sampling.split_assign): content-addressed md5 thresholds, disjoint
-        and exhaustive by construction — the oracle is the same CASE."""
-        from siteone_crawler_spark.operators.sampling import split_assign
-
-        _register(spark, sf_dir)
-        return split_assign(
-            spark.table("documents").select("doc_id"),
-            key="doc_id",
-            splits={"train": 0.8, "val": 0.1, "test": 0.1},
-            salt="sp1",
-        )
-
-    q["split_assign"] = q_split_assign
 
     def q_subword_tokens(spark, sf_dir):
         """BPE-ish subword token counts per language
@@ -1011,23 +900,6 @@ def oracle_sql() -> dict[str, str]:
           (doc_id % 5) <> 0 AS allowed
         FROM documents"""
 
-    # rate=0.2, salt='s1': threshold hex = format(int(0.2 * 65536), '04x')
-    # = '3333'; lowercase-hex string order == numeric order, so the literal
-    # same predicate runs on both engines (operators/sampling.py)
-    o["hash_sample"] = """
-        SELECT doc_id, lang FROM documents
-        WHERE substr(md5(cast(doc_id AS varchar) || 's1'), 1, 4) < '3333'"""
-
-    o["stratified_sample"] = """
-        SELECT lang, doc_id, rn FROM (
-          SELECT lang, doc_id,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(cast(doc_id AS varchar)),
-                            cast(doc_id AS varchar)) AS rn
-          FROM documents)
-        WHERE rn <= 25"""
-
     _sh3 = _shingles_sql(3)
     o["repetition_ratio"] = f"""
         SELECT doc_id,
@@ -1092,82 +964,6 @@ def oracle_sql() -> dict[str, str]:
               WHERE length(w) >= 2)
         SELECT lhs, rhs, CAST(sum(wc) AS bigint) AS pair_count
         FROM p GROUP BY lhs, rhs HAVING sum(wc) >= 2"""
-
-    # PII scan/redact: same deterministic augmentation as the Spark side
-    # (operators/pii.py patterns interpolated verbatim — one source of
-    # truth; the conservative Java/RE2 common regex subset makes the
-    # dialects agree match-for-match). DuckDB single-quoted literals keep
-    # backslashes raw, so the patterns need no re-escaping.
-    from siteone_crawler_spark.operators.pii import PII_ORDER, PII_PATTERNS
-
-    _pii_aug = """
-        WITH aug AS (
-          SELECT doc_id,
-            text ||
-            CASE WHEN doc_id % 7 = 0
-              THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now'
-              ELSE '' END ||
-            CASE WHEN doc_id % 11 = 0
-              THEN ' call 555-123-4567 or 10.0.0.1' ELSE '' END ||
-            CASE WHEN doc_id % 13 = 0
-              THEN ' ssn 123-45-6789 card 4111-1111-1111-1111' ELSE '' END AS t
-          FROM documents)
-    """
-    _pii_counts = ",\n          ".join(
-        f"CAST(len(regexp_extract_all(t, '{PII_PATTERNS[k]}')) AS int) AS n_{k}"
-        for k in PII_ORDER
-    )
-    _pii_total = " + ".join(
-        f"CAST(len(regexp_extract_all(t, '{PII_PATTERNS[k]}')) AS int)"
-        for k in PII_ORDER
-    )
-    o["pii_scan"] = (
-        _pii_aug
-        + f"SELECT doc_id,\n          {_pii_counts},\n          "
-        + f"{_pii_total} AS pii_total\n        FROM aug"
-    )
-
-    _red = "t"
-    for _k in PII_ORDER:
-        _red = f"regexp_replace({_red}, '{PII_PATTERNS[_k]}', '<{_k.upper()}>', 'g')"
-    o["pii_redact"] = (
-        _pii_aug + f"SELECT doc_id, md5({_red}) AS redacted_md5 FROM aug"
-    )
-
-    # temperature mixing: same double arithmetic on both engines (pow/
-    # floor/hex are IEEE-exact; a last-ulp divergence could only flip a
-    # row whose 8-hex hash EQUALS the boundary, P ~ strata/2^32)
-    o["temperature_sample"] = """
-        WITH c AS (
-          SELECT source, count(*) AS n FROM documents GROUP BY source
-        ), t AS (
-          SELECT sum(n) AS N, sum(pow(n, 0.5)) AS W FROM c
-        ), r AS (
-          SELECT c.source,
-                 lpad(lower(hex(CAST(least(
-                   floor(least(0.25 * t.N / t.W * pow(c.n, -0.5), 1.0)
-                         * 4294967296.0),
-                   4294967295.0) AS BIGINT))), 8, '0') AS thr
-          FROM c, t
-        )
-        SELECT d.doc_id, d.source
-        FROM documents d JOIN r ON d.source = r.source
-        WHERE substr(md5(CAST(d.doc_id AS VARCHAR) || 'ts1'), 1, 8) < r.thr"""
-
-    o["pack_sequences"] = f"""
-        WITH d AS (
-          SELECT doc_id, doc_id % 16 AS shard,
-                 len({_TOKS_DUCK}) AS n_tokens,
-                 md5(CAST(doc_id AS VARCHAR)) AS ord_key
-          FROM documents
-        )
-        SELECT doc_id, shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(sum(n_tokens) OVER w - n_tokens AS BIGINT) AS start_tok,
-               CAST(floor((sum(n_tokens) OVER w - n_tokens) / 256.0)
-                    AS BIGINT) AS pack_id
-        FROM d
-        WINDOW w AS (PARTITION BY shard
-                     ORDER BY ord_key, CAST(doc_id AS VARCHAR))"""
 
     o["classifier_score"] = f"""
         WITH toks AS (
@@ -1236,15 +1032,6 @@ def oracle_sql() -> dict[str, str]:
                 AND ellipsis_line_ratio <= 0.3 AND alpha_word_ratio >= 0.8
                 AND stop_hits >= 2) AS keep
         FROM sig"""
-
-    o["split_assign"] = """
-        SELECT doc_id,
-               CASE WHEN substr(md5(cast(doc_id AS varchar) || 'sp1'), 1, 4)
-                         < '1999' THEN 'val'
-                    WHEN substr(md5(cast(doc_id AS varchar) || 'sp1'), 1, 4)
-                         < '3333' THEN 'test'
-                    ELSE 'train' END AS split
-        FROM documents"""
 
     # span-sequence invariant: reproduce the derived spans + md5 fingerprint
     # (SEP = chr(31), struct fields joined kind|text|media_ref in offset order)

@@ -14,7 +14,7 @@ Package layout:
   sources/     docs/seed readers + the checkpointed table contract
   operators/   frontier ordering, seen-set anti-join, SiteOne analyzers
                and reports, plus the training-data operators not yet cut
-               (components, sampling, chunking, dsir, bpe, classifier, pii)
+               (chunking, dsir, bpe, classifier)
   plans/       explain/inspection helpers
   streaming/   wave-as-microbatch driver helpers
   engine.py    the iterative wave driver with checkpoint/resume

@@ -174,7 +174,7 @@ FILE_KINDS = ("audio_src", "video_src")
 def span_kind_allowed(cfg, kind: str, text: str) -> bool:
     """P14: is a link span of `kind`/`text` extracted under cfg's per-class
     toggles? Shared semantics for the simulator (this function) and the
-    engine (span_gate_exprs builds the same predicate natively)."""
+    engine (engine._span_gate_expr builds the same predicate natively)."""
     t = text or ""
     if not cfg.images_enabled:
         if kind in IMAGE_KINDS:

@@ -48,8 +48,6 @@ Scale notes (local[N] in tests and perfbench, 1000 executors in spirit):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -90,10 +88,6 @@ BN_STATE_SCHEMA = "basename string, evt_seqs array<bigint>, n_events long"
 METRICS_SCHEMA = "wave int, stage string, rows long"
 LINEAGE_SCHEMA = "wave int, table string, file string, n_rows long, n_bytes long"
 BLOOMS_SCHEMA = "bucket int, word int, bits long"
-
-
-def _wildcard_to_java_regex(pattern: str) -> str:
-    return "^" + ".*".join(re.escape(p) for p in pattern.lower().split("*")) + "$"
 
 
 def _kind_to_attr_expr():
@@ -628,7 +622,7 @@ class CrawlEngine:
         ih_bare = self.initial_host.removeprefix("www.")
         host_ok = (F.col("host") == self.initial_host) | (bare == F.lit(ih_bare))
         if cfg.allowed_domains:
-            combined = "|".join(_wildcard_to_java_regex(p) for p in cfg.allowed_domains)
+            combined = "|".join(r.pattern for r in cfg.allowed_domain_regexes())
             host_ok = host_ok | F.col("host").rlike(combined)
         c = c.withColumn("__host_ok", host_ok)
 

@@ -1,4 +1,3 @@
 """Frontier-engine operators: ordering, seen-set, candidate pipeline,
 politeness, analyzer aggregations, and the training-data operators
-(connected components, sampling, chunking, dsir, bpe, classifier, pii) not
-yet cut."""
+(chunking, dsir, bpe, classifier) not yet cut."""

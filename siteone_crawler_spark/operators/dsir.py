@@ -8,8 +8,8 @@ document by how target-like its hashed n-gram distribution is,
                 log p_target(bucket(g)) - log p_raw(bucket(g)),
 
 with Laplace-smoothed bucket probabilities p(b) = (count(b) + alpha) /
-(total + alpha * n_buckets). High-weight docs are then kept (top-k or
-Gumbel resampling — both compose with operators/sampling.py).
+(total + alpha * n_buckets). High-weight docs are then kept by top-k or
+Gumbel resampling.
 
 Scale shape: ONE pass over the raw corpus builds a per-(doc, bucket)
 count table (<= n_buckets rows per doc, lazily checkpointed so its two
@@ -90,7 +90,7 @@ def dsir_weights(
     per-doc sum's accumulation order differs between engines). Docs with no
     grams weigh 0.0. `target` is any DataFrame with the same text column —
     typically a small curated corpus (sampled: the estimator only needs
-    bucket frequencies, so a hash_sample of the target suffices)."""
+    bucket frequencies, so a small sample of the target suffices)."""
 
     def grams_of(df: DataFrame) -> DataFrame:
         return df.select(

@@ -5,12 +5,15 @@ through ONE task — fine at unit-test scale, fatal on a 10^10-row frontier.
 This helper assigns a contiguous global rank with the classic two-pass
 pattern: range-repartition on the sort keys, sort within partitions, count
 rows per partition (tiny driver-side collect, one row per partition), then
-add per-partition offsets in a mapInPandas. Wall-clock cost is one range
-shuffle — the minimum any global ordering can pay.
+add per-partition offsets in pure Catalyst: a literal offset array indexed
+by spark_partition_id() plus the row's position from
+monotonically_increasing_id(). Wall-clock cost is one range shuffle — the
+minimum any global ordering can pay.
 
-Determinism: the sort keys must be a unique compound key (the frontier uses
-(parent_seq, span_offset, sub), unique by construction), so the produced
-sequence is independent of partition boundaries and parallelism level.
+Determinism: the sort keys must be a unique compound key (the engine ranks
+the frontier by (parent_seq, offset), unique by construction), so the
+produced sequence is independent of partition boundaries and parallelism
+level.
 """
 
 from __future__ import annotations

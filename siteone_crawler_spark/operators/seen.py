@@ -92,10 +92,10 @@ class SeenSet:
             new = self.prefilter.unionByName(new)
         self.prefilter = new.groupBy("bucket", "word").agg(F.bit_or("bits").alias("bits"))
 
-    def maybe_seen(self, candidates: DataFrame, key_col: str = "url_key") -> DataFrame:
+    def maybe_seen(self, candidates: DataFrame) -> DataFrame:
         """`candidates` plus `__bucket` and the prefilter verdict `__maybe`
         (False = definitely new; True = seen or a false positive)."""
-        key = F.col(key_col)
+        key = F.col("url_key")
         word, mask = _word_and_mask(key)
         words = self.prefilter.select(
             F.col("bucket").alias("__bucket"), F.col("word").alias("__word"),
@@ -112,10 +112,8 @@ class SeenSet:
             .drop("__word", "__mask", "__bits")
         )
 
-    def filter_new(
-        self, candidates: DataFrame, key_col: str = "url_key", n_seen: int | None = None
-    ) -> DataFrame:
-        """Return candidates whose key is NOT in the seen set.
+    def filter_new(self, candidates: DataFrame, n_seen: int | None = None) -> DataFrame:
+        """Return candidates whose url_key is NOT in the seen set.
 
         Below bloom_min_keys (or before any absorb): one broadcast anti-join.
         Above it, prefilter misses skip the join; only maybe-seen rows
@@ -123,17 +121,16 @@ class SeenSet:
         """
         if n_seen is not None and n_seen == 0:
             return candidates
-        keys = self.keys.select(F.col("url_key").alias(key_col))
         if self.prefilter is None or (n_seen is not None and n_seen < self.bloom_min_keys):
-            return candidates.join(F.broadcast(keys), on=[key_col], how="left_anti")
-        cand = self.maybe_seen(candidates, key_col)
+            return candidates.join(F.broadcast(self.keys), on=["url_key"], how="left_anti")
+        cand = self.maybe_seen(candidates)
         definite_new = cand.filter(~F.col("__maybe"))
         maybe = cand.filter(F.col("__maybe"))
         # exact anti-join only for the maybe slice, co-keyed on (key, bucket)
         # so both sides hash identically in the shuffle; no broadcast hint —
         # AQE broadcasts the key side when its runtime size allows
-        bucket = key_bucket(F.col(key_col), self.n_buckets)
+        bucket = key_bucket(F.col("url_key"), self.n_buckets)
         survivors = maybe.join(
-            keys.withColumn("__bucket", bucket), on=[key_col, "__bucket"], how="left_anti"
+            self.keys.withColumn("__bucket", bucket), on=["url_key", "__bucket"], how="left_anti"
         )
         return definite_new.unionByName(survivors).drop("__bucket", "__maybe")

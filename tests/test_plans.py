@@ -184,16 +184,6 @@ def test_classifier_score_broadcasts_weights(spark):
     assert has_broadcast_join(scored)
 
 
-def test_split_assign_is_scan_side_projection(spark):
-    """split_assign must add zero exchanges: one projection over the scan."""
-    from siteone_crawler_spark.operators.sampling import split_assign
-
-    df = spark.range(100).select(F.col("id").alias("doc_id"))
-    plan = explain_str(split_assign(df, key="doc_id"), "simple")
-    assert "Exchange" not in plan
-    assert "Python" not in plan
-
-
 def test_wave_resolve_udf_runs_once(spark, tmp_path):
     """The wave's resolve UDF is marked nondeterministic so Catalyst cannot
     copy it into both the `r.valid` filter and the `r.*` projection (a

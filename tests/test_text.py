@@ -1,7 +1,10 @@
 """Text kernels of functions/text.py that the kept operators and oracle
-pairs call."""
+pairs call: word and subword token counts, and the n-gram repetition
+fraction of the `repetition_ratio` pair."""
 
 import pyspark.sql.functions as F
+
+from siteone_crawler_spark.functions.text import ngram_repetition
 
 
 def test_token_count(spark):
@@ -31,3 +34,21 @@ def test_subword_token_count(spark):
         for r in df.select("doc_id", subword_token_count(F.col("text")).alias("n")).collect()
     }
     assert got == {1: 4, 2: 3, 3: 5, 4: 0, 5: 5}
+
+
+def test_ngram_repetition_values(spark):
+    rows = [
+        (1, "a b c a b c a b"),  # 6 shingles, 3 distinct -> 0.5
+        (2, "x y"),  # < 3 tokens -> 0.0
+        (3, "p q r s"),  # 2 shingles, both distinct -> 0.0
+        (4, "z z z z z"),  # 3 shingles, 1 distinct -> 2/3
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    got = {
+        r["doc_id"]: r["f"]
+        for r in df.select("doc_id", ngram_repetition(F.col("text"), 3).alias("f")).collect()
+    }
+    assert got[1] == 0.5
+    assert got[2] == 0.0
+    assert got[3] == 0.0
+    assert abs(got[4] - 2 / 3) < 1e-12
