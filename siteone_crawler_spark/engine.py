@@ -4,7 +4,11 @@ Re-architecture of the reference's tokio worker loop
 (/root/reference/src/engine/crawler.rs:222-391: FIFO dequeue, per-URL task,
 shared DashMap state) as deterministic Spark dataflow. One wave =
 
-    pending(K) ⋈ docs ⋈ docs_meta             (the synthetic "fetch")
+    pending(K) → politeness admission         (crawler.rs:540-569 superset:
+                                                global + per-host budgets, one
+                                                cached per-host ranking; the
+                                                rest -> deferred(K+1))
+      → admitted ⋈ docs ⋈ docs_meta            (the synthetic "fetch")
       → basename circuit-breaker pre-check     (crawler.rs:506-525)
       → explode spans → resolve/canonicalize   (pandas UDF, crawler.rs:1020+)
       → host / breaker / robots / regex /      (enqueue pipeline,
@@ -47,6 +51,8 @@ Scale notes (local[N] in tests and perfbench, 1000 executors in spirit):
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -380,10 +386,10 @@ class CrawlEngine:
         mins = [m for m in mins if m is not None]
         self._min_pending_seq = min(mins) if mins else None
 
-        # politeness admission (north-rule superset; parity mode admits all)
+        # politeness admission (north-rule superset; parity mode admits all).
+        # Under budgets both frames filter one cached ranking of the pending
+        # rows; a global budget's bound collect materializes it.
         admitted, deferred = self._admit(pending)
-        if deferred is not None:
-            self.store.write_table("deferred", wave + 1, deferred)
 
         # "fetch": join meta (S1 analog — in a real deployment this is a
         # mapInPandas batch HTTP fetcher; here the docs table IS the web).
@@ -404,163 +410,176 @@ class CrawlEngine:
         self._wave_caches.append(raw_fetch)
 
         # basename circuit-breaker pre-check -> final status (-6 short-circuit).
-        # Its tiny collect is the wave's FIRST action — it also materializes
-        # the raw_fetch cache.
+        # Its tiny collect materializes the raw_fetch cache (and, with it,
+        # every partition of the admission cache); in parity mode it is the
+        # wave's first action.
         fetched = self._apply_breaker_precheck(raw_fetch)
-        _mark("breaker_precheck")
 
-        # visited is the FETCH log: wave = the wave that processed the row
-        # (== discovery wave under parity; later when politeness defers)
-        visited = fetched.select(
-            "url", "url_key", "uq_id", "host", "path", "ext", "depth",
-            F.lit(wave).cast("int").alias("wave"), "seq",
-            "source_uq_id", "source_attr",
-            F.col("status").alias("status_code"),
-            "content_type_header",
-            # -6 short-circuits never fetch (crawler.rs:509 create_skipped):
-            # no body, no timing
-            F.when(F.col("status") == -6, F.lit(0))
-            .otherwise(F.coalesce(F.col("size"), F.lit(0)))
-            .cast("long")
-            .alias("size"),
-            F.when(F.col("status") == -6, F.lit(0.0))
-            .otherwise(F.coalesce(F.col("request_time_ms"), F.lit(0.0)))
-            .alias("request_time_ms"),
-            # F9 header model: flags/lifetime only for real responses
-            # (crawler.rs:766-772 -> NOT_AVAILABLE when status <= 0)
-            F.when(F.col("status") > 0, F.col("headers")).alias("headers"),
-            F.when(F.col("status") <= 0, F.lit(hdrs.NOT_AVAILABLE))
-            .otherwise(hdrs.cache_flags_expr(F.col("headers")))
-            .cast("int")
-            .alias("cache_type_flags"),
-            F.when(
-                F.col("status") > 0, hdrs.cache_lifetime_expr(F.col("headers"))
-            ).alias("cache_lifetime"),
-        )
-        # ---- extraction: spans of 200-pages + redirect Locations ----------
-        # spans come from a fresh docs join (not the slim cache — see above);
-        # docs is bucketed/persisted on the join key so this is co-located
-        pages = (
-            fetched.filter(F.col("status") == 200)
-            .select("url", "host", "seq", "uq_id")
-            .join(docs, F.col("url") == F.col("__doc_url"), "inner")
-            .filter(F.col("spans").isNotNull())
-        )
-        base_expr = F.coalesce(
-            F.try_element_at(
-                F.filter("spans", lambda s: s.kind == F.lit("base_href")), F.lit(1)
-            )["text"],
-            F.col("url"),
-        )
-        link_spans = (
-            pages.withColumn("base", base_expr)
-            .select(
+        # One pool for the wave's concurrent jobs: the deferred write, the
+        # visited write next to the candidate count, then the skipped write
+        # next to the finalize. Three workers: the deferred write never
+        # queues the count. Leaving the block waits for every job, so a
+        # failure never leaves a write running behind the exception.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            # the pre-check's collect has materialized the admission cache, so
+            # the deferred write reads only cached rows, off the wave's
+            # critical path; it is joined before the metrics write and the
+            # commit, so a failed write still fails the wave
+            f_def = None
+            if deferred is not None:
+                f_def = pool.submit(self.store.write_table, "deferred", wave + 1, deferred)
+            _mark("breaker_precheck")
+
+            # visited is the FETCH log: wave = the wave that processed the row
+            # (== discovery wave under parity; later when politeness defers)
+            visited = fetched.select(
+                "url", "url_key", "uq_id", "host", "path", "ext", "depth",
+                F.lit(wave).cast("int").alias("wave"), "seq",
+                "source_uq_id", "source_attr",
+                F.col("status").alias("status_code"),
+                "content_type_header",
+                # -6 short-circuits never fetch (crawler.rs:509 create_skipped):
+                # no body, no timing
+                F.when(F.col("status") == -6, F.lit(0))
+                .otherwise(F.coalesce(F.col("size"), F.lit(0)))
+                .cast("long")
+                .alias("size"),
+                F.when(F.col("status") == -6, F.lit(0.0))
+                .otherwise(F.coalesce(F.col("request_time_ms"), F.lit(0.0)))
+                .alias("request_time_ms"),
+                # F9 header model: flags/lifetime only for real responses
+                # (crawler.rs:766-772 -> NOT_AVAILABLE when status <= 0)
+                F.when(F.col("status") > 0, F.col("headers")).alias("headers"),
+                F.when(F.col("status") <= 0, F.lit(hdrs.NOT_AVAILABLE))
+                .otherwise(hdrs.cache_flags_expr(F.col("headers")))
+                .cast("int")
+                .alias("cache_type_flags"),
+                F.when(
+                    F.col("status") > 0, hdrs.cache_lifetime_expr(F.col("headers"))
+                ).alias("cache_lifetime"),
+            )
+            # ---- extraction: spans of 200-pages + redirect Locations ------
+            # spans come from a fresh docs join (not the slim cache — see above);
+            # docs is bucketed/persisted on the join key so this is co-located
+            pages = (
+                fetched.filter(F.col("status") == 200)
+                .select("url", "host", "seq", "uq_id")
+                .join(docs, F.col("url") == F.col("__doc_url"), "inner")
+                .filter(F.col("spans").isNotNull())
+            )
+            base_expr = F.coalesce(
+                F.try_element_at(
+                    F.filter("spans", lambda s: s.kind == F.lit("base_href")), F.lit(1)
+                )["text"],
+                F.col("url"),
+            )
+            link_spans = (
+                pages.withColumn("base", base_expr)
+                .select(
+                    "base",
+                    "host",
+                    F.col("seq").alias("parent_seq"),
+                    F.col("uq_id").alias("source_uq_id"),
+                    F.explode("spans").alias("s"),
+                )
+                .filter(~F.col("s.kind").isin(*NON_LINK_KINDS))
+            )
+            if not cfg.crawl_assets:
+                link_spans = link_spans.filter(~F.col("s.kind").isin(*ASSET_KINDS))
+            link_spans = link_spans.filter(_span_gate_expr(cfg))
+            if cfg.single_page:
+                link_spans = link_spans.filter(F.col("s.kind") != "a_href")
+            if cfg.single_foreign_page:
+                # P13 remainder (html_processor.rs:180-182): pages on a foreign
+                # 2nd-level domain contribute no <a href> links
+                d2l = F.regexp_extract(F.col("host"), r"([^.]+\.[^.]+)$", 1)
+                init_d2l = ".".join(self.initial_host.split(".")[-2:])
+                link_spans = link_spans.filter(
+                    (F.col("s.kind") != "a_href") | (d2l == F.lit(init_d2l))
+                )
+            link_spans = link_spans.drop("host")
+            candidates = link_spans.select(
                 "base",
-                "host",
+                F.col("s.text").alias("href"),
+                "parent_seq",
+                F.col("s.offset").alias("offset"),
+                F.col("s.kind").alias("kind"),
+                "source_uq_id",
+            )
+            redirects = fetched.filter(
+                F.col("status").between(301, 308) & F.col("redirect_location").isNotNull()
+            ).select(
+                F.col("url").alias("base"),
+                F.col("redirect_location").alias("href"),
                 F.col("seq").alias("parent_seq"),
+                F.lit(-1).alias("offset"),
+                F.lit("redirect_location").alias("kind"),
                 F.col("uq_id").alias("source_uq_id"),
-                F.explode("spans").alias("s"),
             )
-            .filter(~F.col("s.kind").isin(*NON_LINK_KINDS))
-        )
-        if not cfg.crawl_assets:
-            link_spans = link_spans.filter(~F.col("s.kind").isin(*ASSET_KINDS))
-        link_spans = link_spans.filter(_span_gate_expr(cfg))
-        if cfg.single_page:
-            link_spans = link_spans.filter(F.col("s.kind") != "a_href")
-        if cfg.single_foreign_page:
-            # P13 remainder (html_processor.rs:180-182): pages on a foreign
-            # 2nd-level domain contribute no <a href> links
-            d2l = F.regexp_extract(F.col("host"), r"([^.]+\.[^.]+)$", 1)
-            init_d2l = ".".join(self.initial_host.split(".")[-2:])
-            link_spans = link_spans.filter(
-                (F.col("s.kind") != "a_href") | (d2l == F.lit(init_d2l))
-            )
-        link_spans = link_spans.drop("host")
-        candidates = link_spans.select(
-            "base",
-            F.col("s.text").alias("href"),
-            "parent_seq",
-            F.col("s.offset").alias("offset"),
-            F.col("s.kind").alias("kind"),
-            "source_uq_id",
-        )
-        redirects = fetched.filter(
-            F.col("status").between(301, 308) & F.col("redirect_location").isNotNull()
-        ).select(
-            F.col("url").alias("base"),
-            F.col("redirect_location").alias("href"),
-            F.col("seq").alias("parent_seq"),
-            F.lit(-1).alias("offset"),
-            F.lit("redirect_location").alias("kind"),
-            F.col("uq_id").alias("source_uq_id"),
-        )
-        candidates = candidates.unionByName(redirects).withColumn(
-            "source_attr", _kind_to_attr_expr()
-        )
-
-        # the candidate cache (fetch join -> explode -> resolve/robots UDF —
-        # the wave's heaviest compute) materializes CONCURRENTLY with the
-        # visited write + driver-side event absorption: the breaker flag is
-        # attached only after both finish (it needs this wave's events), so
-        # neither branch waits on the other. Concurrent jobs over the same
-        # cached plan are safe — BlockManager locks per partition.
-        from concurrent.futures import ThreadPoolExecutor
-
-        c = self._resolve_candidates(candidates)
-
-        def _write_visited_and_absorb():
-            t0 = _time.time()
-            self.store.write_table(
-                "visited", wave, visited, max_files=self._nfiles(n_pending)
-            )
-            t1 = _time.time()
-            metrics.append((wave, "subtime_us:visited_write", int((t1 - t0) * 1e6)))
-            self._absorb_events(wave)  # driver-side column read, no job
-            metrics.append(
-                (wave, "subtime_us:absorb_events", int((_time.time() - t1) * 1e6))
+            candidates = candidates.unionByName(redirects).withColumn(
+                "source_attr", _kind_to_attr_expr()
             )
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_vis = ex.submit(_write_visited_and_absorb)
-            f_cnt = ex.submit(c.count)
+            # the candidate cache (fetch join -> explode -> resolve/robots UDF —
+            # the wave's heaviest compute) materializes CONCURRENTLY with the
+            # visited write + driver-side event absorption: the breaker flag is
+            # attached only after both finish (it needs this wave's events), so
+            # neither branch waits on the other. Concurrent jobs over the same
+            # cached plan are safe — BlockManager locks per partition.
+            c = self._resolve_candidates(candidates)
+
+            def _write_visited_and_absorb():
+                t0 = _time.time()
+                self.store.write_table(
+                    "visited", wave, visited, max_files=self._nfiles(n_pending)
+                )
+                t1 = _time.time()
+                metrics.append((wave, "subtime_us:visited_write", int((t1 - t0) * 1e6)))
+                self._absorb_events(wave)  # driver-side column read, no job
+                metrics.append(
+                    (wave, "subtime_us:absorb_events", int((_time.time() - t1) * 1e6))
+                )
+
+            f_vis = pool.submit(_write_visited_and_absorb)
+            f_cnt = pool.submit(c.count)
             n_cand_all = f_cnt.result()
             f_vis.result()
-        _mark("visited+candidates_materialize")
-        metrics.append((wave, "frontier", self.store.count_rows("visited", wave)))
-        metrics.append((wave, "candidates", n_cand_all))
+            _mark("visited+candidates_materialize")
+            metrics.append((wave, "frontier", self.store.count_rows("visited", wave)))
+            metrics.append((wave, "candidates", n_cand_all))
 
-        accepted, skipped = self._split_candidates(c, wave + 1, self._events_agg())
+            accepted, skipped = self._split_candidates(c, wave + 1, self._events_agg())
 
-        # skipped-write and frontier-finalize are independent once the cache
-        # is hot — run them as concurrent Spark jobs (fills idle cores and
-        # removes their latencies from the wave's serial chain). Per-thread
-        # sub-timings land as `subtime_us:` metric rows (a separate prefix:
-        # the bench sums `time_us:` rows for its tail residual, and these
-        # overlap in wall time).
-        def _timed(name: str, fn, *a):
-            t0 = _time.time()
-            out = fn(*a)
-            metrics.append(
-                (wave, f"subtime_us:{name}", int((_time.time() - t0) * 1e6))
-            )
-            return out
+            # skipped-write and frontier-finalize are independent once the cache
+            # is hot — run them as concurrent Spark jobs (fills idle cores and
+            # removes their latencies from the wave's serial chain). Per-thread
+            # sub-timings land as `subtime_us:` metric rows (a separate prefix:
+            # the bench sums `time_us:` rows for its tail residual, and these
+            # overlap in wall time).
+            def _timed(name: str, fn, *a):
+                t0 = _time.time()
+                out = fn(*a)
+                metrics.append(
+                    (wave, f"subtime_us:{name}", int((_time.time() - t0) * 1e6))
+                )
+                return out
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_skip = ex.submit(
+            f_skip = pool.submit(
                 _timed, "skipped_write", self.store.write_table, "skipped",
                 wave + 1, skipped, self._nfiles(n_cand_all),
             )
-            f_new = ex.submit(
+            f_new = pool.submit(
                 _timed, "finalize", self._finalize_frontier, accepted,
                 wave + 1, n_cand_all, metrics,
             )
             f_skip.result()
             n_new = f_new.result()
-        _mark("skipped+finalize")
-        metrics.append((wave, "enqueued", n_new))
-        metrics.append((wave, "skipped", self.store.count_rows("skipped", wave + 1)))
-        _mark("footer_counts")
+            _mark("skipped+finalize")
+            metrics.append((wave, "enqueued", n_new))
+            metrics.append((wave, "skipped", self.store.count_rows("skipped", wave + 1)))
+            if f_def is not None:
+                f_def.result()
+            _mark("footer_counts")
 
         # metrics + lineage are rows the driver holds: pyarrow writes, no job
         self.store.write_table("metrics", wave, metrics, schema=METRICS_SCHEMA)
@@ -1034,10 +1053,22 @@ class CrawlEngine:
         """Politeness admission (north-rule superset — the reference's
         politeness is a single global rate limiter, crawler.rs:540-569, with
         NO Crawl-delay support): a priority queue keyed by
-        (depth, host, priority=seq) assigns each host a per-wave fetch
-        budget; robots Crawl-delay shrinks it (budget = wave_seconds/delay).
-        Deferred rows queue for the next wave. Parity config (budget=0,
-        wave_seconds=0) admits everything -> exact BFS order."""
+        (depth, host, priority=seq) admits the first K rows of the wave
+        (global budget) and gives each host a per-wave fetch budget; robots
+        Crawl-delay shrinks it (budget = wave_seconds/delay). Deferred rows
+        queue for the next wave. Parity config (budget=0, wave_seconds=0)
+        admits everything -> exact BFS order.
+
+        Admission is computed ONCE: each row's rank within its host,
+        `row_number() over (partition by host order by depth, seq)`, is
+        taken over ALL pending rows and the ranked frame is cached. The
+        global budget keeps the K smallest (depth, seq) rows — a prefix of a
+        total order (seq is unique) — so every row of a host that precedes
+        an in-bound row is in-bound too: an in-bound row's rank among all
+        pending rows equals its rank among the globally admitted rows, and
+        the window need not wait for the bound. `admitted` (in bound AND
+        rank <= budget) and `deferred` (its complement) are both filters
+        over the one cache; the global bound's collect materializes it."""
         cfg = self.config
         if (
             cfg.per_host_wave_budget <= 0
@@ -1046,31 +1077,8 @@ class CrawlEngine:
         ):
             return pending, None
 
-        # global budget first (the reference's single global rate limiter,
-        # crawler.rs:540-569: first K requests in queue order): find the
-        # K-th smallest (depth, seq) via TakeOrdered — a config-sized top-K,
-        # partial per partition then one K-row reduce, never a global sort
-        # of the frontier — and admit rows at-or-under the bound. seq is
-        # globally unique, so the cut is exact.
-        global_deferred = None
-        if cfg.global_wave_budget > 0:
-            k = cfg.global_wave_budget
-            row = (
-                pending.select("depth", "seq")
-                .orderBy("depth", "seq")
-                .limit(k)
-                .agg(F.max(F.struct("depth", "seq")).alias("b"))
-                .collect()[0]["b"]
-            )
-            if row is not None:
-                within = (F.col("depth") < row["depth"]) | (
-                    (F.col("depth") == row["depth"]) & (F.col("seq") <= row["seq"])
-                )
-                global_deferred = pending.filter(~within)
-                pending = pending.filter(within)
-        if cfg.per_host_wave_budget <= 0 and cfg.wave_seconds <= 0:
-            return pending, global_deferred
-
+        # per-host budget: the per-host cap and/or the Crawl-delay budget
+        # (the smaller wins)
         budgets = []
         if cfg.per_host_wave_budget > 0:
             budgets.append(F.lit(cfg.per_host_wave_budget))
@@ -1097,17 +1105,40 @@ class CrawlEngine:
                 budgets.append(F.coalesce(mapping[F.col("host")], F.lit(default_budget)))
             else:
                 budgets.append(F.lit(default_budget))
-        budget_col = budgets[0] if len(budgets) == 1 else F.least(*budgets)
+        budget = None
+        if budgets:
+            budget = budgets[0] if len(budgets) == 1 else F.least(*budgets)
+            # rank over ALL pending rows — see the prefix argument above
+            w = W.partitionBy("host").orderBy("depth", "seq")
+            pending = pending.withColumn("__hr", F.row_number().over(w))
+        pending.persist(StorageLevel.MEMORY_AND_DISK)
+        self._wave_caches.append(pending)
 
-        w = W.partitionBy("host").orderBy("depth", "seq")
-        ranked = pending.withColumn("__hr", F.row_number().over(w)).withColumn(
-            "__budget", budget_col
+        admit = F.lit(True)
+        # global budget (the reference's single global rate limiter,
+        # crawler.rs:540-569: first K requests in queue order): find the
+        # K-th smallest (depth, seq) via TakeOrdered — a config-sized top-K,
+        # partial per partition then one K-row reduce, never a global sort
+        # of the frontier — and admit rows at-or-under the bound. seq is
+        # globally unique, so the cut is exact.
+        if cfg.global_wave_budget > 0:
+            row = (
+                pending.select("depth", "seq")
+                .orderBy("depth", "seq")
+                .limit(cfg.global_wave_budget)
+                .agg(F.max(F.struct("depth", "seq")).alias("b"))
+                .collect()[0]["b"]
+            )
+            if row is not None:
+                admit = (F.col("depth") < row["depth"]) | (
+                    (F.col("depth") == row["depth"]) & (F.col("seq") <= row["seq"])
+                )
+        if budget is not None:
+            admit = admit & (F.col("__hr") <= budget)
+        return (
+            pending.filter(admit).drop("__hr"),
+            pending.filter(~admit).drop("__hr"),
         )
-        admitted = ranked.filter(F.col("__hr") <= F.col("__budget")).drop("__hr", "__budget")
-        deferred = ranked.filter(F.col("__hr") > F.col("__budget")).drop("__hr", "__budget")
-        if global_deferred is not None:
-            deferred = deferred.unionByName(global_deferred)
-        return admitted, deferred
 
     def _final_tables(self, last_wave: int) -> dict:
         # frontier/skipped rows discovered while processing wave K land at

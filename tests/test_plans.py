@@ -219,3 +219,49 @@ def test_wave_resolve_udf_runs_once(spark, tmp_path):
         for h in eng._wave_caches:
             h.unpersist()
         eng._wave_caches.clear()
+
+
+def _outside_cache(lines: list[str]) -> list[str]:
+    """Plan lines that are not inside an InMemoryRelation's cached plan."""
+    out, cache_depth = [], None
+    for ln in lines:
+        depth = len(ln) - len(ln.lstrip(" +-:"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return out
+
+
+def test_admission_ranks_once_into_one_cache(spark, tmp_path):
+    """Under budgets, politeness admission ranks the pending rows once: the
+    admitted and deferred frames each read ONE cached ranking and hold no
+    Window outside it (the deferred write and the fetch join no longer
+    re-run the per-host window). Parity admission caches nothing."""
+    from siteone_crawler_spark.config import CrawlConfig
+    from siteone_crawler_spark.engine import FRONTIER_SCHEMA, CrawlEngine
+
+    pending = spark.createDataFrame(
+        [(f"https://h{i % 3}.test/{i}", f"k{i}", f"u{i}", f"h{i % 3}.test", f"/{i}", "",
+          i % 2, 0, i, "", 10) for i in range(12)],
+        FRONTIER_SCHEMA,
+    )
+    cfg = CrawlConfig(global_wave_budget=5, per_host_wave_budget=2)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ckpt"), n_buckets=4)
+    try:
+        admitted, deferred = eng._admit(pending)
+        assert len(eng._wave_caches) == 1
+        for df in (admitted, deferred):
+            lines = explain_str(df, "simple").splitlines()
+            assert sum("InMemoryTableScan" in ln for ln in lines) == 1, "\n".join(lines)
+            assert any("Window" in ln for ln in lines), "\n".join(lines)
+            assert not any("Window" in ln for ln in _outside_cache(lines)), "\n".join(lines)
+    finally:
+        for h in eng._wave_caches:
+            h.unpersist()
+        eng._wave_caches.clear()
+
+    parity = CrawlEngine(spark, CrawlConfig(), str(tmp_path / "ckpt2"), n_buckets=4)
+    admitted, deferred = parity._admit(pending)
+    assert admitted is pending and deferred is None
+    assert parity._wave_caches == []
